@@ -71,6 +71,21 @@ object Sessions {
       // naive parquet timestamps (isAdjustedToUTC=false) → TIMESTAMP_NTZ,
       // the DuckDB-comparable representation.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+      // `file:` through the engine's NioLocalFileSystem (FileSystem API)
+      // and NioLocalFs (FileContext, which the checkpoint logs and state
+      // stores use). Without libhadoop the stock local filesystem starts
+      // a chmod process for every file and directory it creates and a
+      // readlink process on every FileContext rename: 4,755 process
+      // launches in one live_1k benchmark run (10 with these), most of
+      // each micro-batch's state, WAL and offset commit time. These make
+      // the same system calls from the JVM; the bytes, permissions, .crc
+      // sidecars and their checks on read, Spark's state-file checksums
+      // and the rename-based commits stay identical, and hdfs: and every
+      // other scheme keep their stock filesystems.
+      .config("spark.hadoop.fs.file.impl",
+              classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+              classOf[NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
