@@ -157,7 +157,7 @@ object Bench {
     // deterministic workload timed once per bench run gives cross-round
     // judging a denominator: compare query_min / cal_sec, not raw
     // seconds, when two rounds' artifacts disagree uniformly. Shared
-    // with StreamBench via HostCal (which also documents the /proc/stat
+    // with perfbench via HostCal (which also documents the /proc/stat
     // USER_HZ + cgroup assumptions, r16 ADVICE).
     val calSingle = HostCal.calSingle()
     val calPar = HostCal.calPar()

@@ -1,14 +1,15 @@
 package graft
 
 /** Host-speed calibration + CPU-steal telemetry shared by the batch
-  * ([[Bench]]) and streaming ([[StreamBench]]) harnesses.
+  * bench ([[Bench]]) and the repository benchmark (`perfbench/`).
   *
   * Why it exists: this box's measured speed drifts run-over-run with NO
   * code change — r15→r16 showed a near-uniform 1.5–2× swing across all
   * batch queries at ≈0% steal (frequency scaling / sub-steal neighbor
-  * contention), and STREAMBENCH p50s moved ±25% the same way. Raw
-  * numbers from different days are not comparable; these two signals
-  * make the drift visible in the artifact itself:
+  * contention), and the old streaming capacity p50s (STREAMBENCH.json)
+  * moved ±25% the same way. Raw numbers from different days are not
+  * comparable; these two signals make the drift visible in the artifact
+  * itself:
   *
   *  - [[calSingle]]/[[calPar]]: a fixed deterministic xorshift64*
   *    checksum workload timed at 1 thread and all threads — the

@@ -77,33 +77,24 @@ object Funnel {
       .select(md5(col("text")).as("digest"), col("doc_id"))
       .groupBy(col("digest"))
       .agg(min(col("doc_id")).as("keeper"))
-    // The two EAGER pipelines (the LSH+CC chain's cache fills and
-    // checkpoints; the LM model pin's count) share no data — construct
-    // them from two driver threads so their materialization jobs
-    // overlap instead of serializing (guide §2.6; the funnel profile is
-    // job-latency-bound: 8-vs-32-core ratio ≈ 1.0). Plans unchanged.
-    val ((lbl, cont), ppl) = graft.Par.together(
-      {
-        // ONE corpus tokenize+shingle pass feeds BOTH the near-dup pair
-        // graph and the contamination probe (guide §2.3) — previously
-        // Decontam re-derived the identical shingles from the texts.
-        val sh = Dedup.pinnedShingles(spark, dir)
-        // near-dup cluster representative (min reachable id — the
-        // dedupClusters keep rule)
-        val lbl = Cluster.connectedComponents(
-          base.select(col("doc_id").as("id")),
-          Dedup.lshPairsFrom(sh)
-            .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-          .select(col("id").as("doc_id"), col("label"))
-        val cont = Decontam.contaminationFromShingles(
-            sh.select(col("doc_id"), explode(col("ss")).as("shingle")))
-          .select(col("doc_id"), col("contaminated"))
-        (lbl, cont)
-      },
-      // CCNet keep rule: head+middle survive, tail (and unscorable
-      // sub-bigram docs, absent from the scored frame) drop
-      LangModel.bucketsOf(base.select(col("doc_id"), col("text")))
-        .select(col("doc_id"), col("bucket")))
+    // ONE corpus tokenize+shingle pass feeds BOTH the near-dup pair
+    // graph and the contamination probe (guide §2.3) — previously
+    // Decontam re-derived the identical shingles from the texts.
+    val sh = Dedup.pinnedShingles(spark, dir)
+    // near-dup cluster representative (min reachable id — the
+    // dedupClusters keep rule)
+    val lbl = Cluster.connectedComponents(
+      base.select(col("doc_id").as("id")),
+      Dedup.lshPairsFrom(sh)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
+      .select(col("id").as("doc_id"), col("label"))
+    val cont = Decontam.contaminationFromShingles(
+        sh.select(col("doc_id"), explode(col("ss")).as("shingle")))
+      .select(col("doc_id"), col("contaminated"))
+    // CCNet keep rule: head+middle survive, tail (and unscorable
+    // sub-bigram docs, absent from the scored frame) drop
+    val ppl = LangModel.bucketsOf(base.select(col("doc_id"), col("text")))
+      .select(col("doc_id"), col("bucket"))
     val s2 = col("url_kept")
     val s3 = s2 && col("doc_id") === col("keeper")
     val s4 = s3 && col("doc_id") === col("label")
@@ -260,27 +251,18 @@ object Funnel {
         .distinct()), "digest")
       .distinct()
       .withColumn("in_hist", lit(1))
-    // The two EAGER pipelines overlap from two driver threads (guide
-    // §2.6, the [[flaggedDocs]] rationale): the manifest chain's cache
-    // fills + bloom build, and the history-model pin's count. The
-    // shingle pass is shared with the contamination probe (§2.3).
-    val ((man, cont), ppl) = graft.Par.together(
-      {
-        val sh = Dedup.pinnedShingles(spark, dir)
-        val man = Dedup.incrementalManifestFrom(spark, dir, sh)
-          .select(col("doc_id"), col("kept"))
-        val cont = Decontam.contaminationFromShingles(
-            sh.select(col("doc_id"), explode(col("ss")).as("shingle")))
-          .select(col("doc_id"), col("contaminated"))
-        (man, cont)
-      },
-      {
-        val model = LangModel.trainBigramModel(
-          histBase.select(col("doc_id"), col("text")))
-        LangModel.bucketsWith(
-            batchBase.select(col("doc_id"), col("text")), model)
-          .select(col("doc_id"), col("bucket"))
-      })
+    // The shingle pass is shared with the contamination probe (§2.3).
+    val sh = Dedup.pinnedShingles(spark, dir)
+    val man = Dedup.incrementalManifestFrom(spark, dir, sh)
+      .select(col("doc_id"), col("kept"))
+    val cont = Decontam.contaminationFromShingles(
+        sh.select(col("doc_id"), explode(col("ss")).as("shingle")))
+      .select(col("doc_id"), col("contaminated"))
+    val model = LangModel.trainBigramModel(
+      histBase.select(col("doc_id"), col("text")))
+    val ppl = LangModel.bucketsWith(
+        batchBase.select(col("doc_id"), col("text")), model)
+      .select(col("doc_id"), col("bucket"))
     val s2 = col("url_kept")
     val s3 = s2 && col("doc_id") === col("keeper") && col("in_hist").isNull
     val s4 = s3 && col("kept")

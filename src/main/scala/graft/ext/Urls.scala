@@ -101,8 +101,8 @@ object Urls {
     * regex evaluated on the row's own domain. The two broadcast builds
     * (each a full scan + distinct exchange) were tautological and are
     * replaced by per-row predicates — measured 1.42 s → ~0.35 s for
-    * [[keepFlags]], identical rows (the shared oracle still spells the
-    * join, pinning the equivalence). At production scale the lists are
+    * the funnel's URL flag stage, identical rows (the shared oracle
+    * still spells the join, pinning the equivalence). At production scale the lists are
     * EXTERNAL artifacts (the public-suffix list plus a curated domain
     * file) and the broadcast-join shape returns — the identity only
     * holds when the list is derived from the probed corpus itself. */
@@ -115,10 +115,10 @@ object Urls {
 
   /** The stage-2 verdict as ONE per-row expression over (doc_id, source)
     * — no join, no second scan (r22, guide §2.4): [[Funnel.flaggedDocs]]
-    * previously joined [[keepFlags]] back on doc_id, but the flag frame
-    * derives 1:1 from the same documents scan it was probed against, so
-    * the join was a provable identity (the r21 list-join elimination one
-    * level up). Exactly [[curated]]'s `kept` column, inlined. */
+    * previously joined a (doc_id, url_kept) flag frame back on doc_id,
+    * but that frame derives 1:1 from the same documents scan it was
+    * probed against, so the join was a provable identity (the r21
+    * list-join elimination one level up). Exactly [[curated]]'s `kept` column, inlined. */
   private[ext] def keptExpr: Column = {
     val dom = registrableOf(hostOf(urlOf))
     allowOf(dom) || !blockOf(dom)
@@ -151,12 +151,6 @@ object Urls {
            sum(when(col("kept"), 0L).otherwise(1L)).as("n_blocked"),
            sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
       .presentSorted(col("domain"))
-
-  /** (doc_id, url_kept) for the funnel's stage-2 gate — the curation
-    * verdict as a doc_id-keyed flag frame, [[Funnel.flaggedDocs]]'
-    * join contract. */
-  private[ext] def keepFlags(docs: DataFrame): DataFrame =
-    curated(docs).select(col("doc_id"), col("kept").as("url_kept"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "url_curate" -> ((s, d) => urlCurate(s, d)),

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.schema.Schemas
 import graft.sources.TickGen
+import graft.stream.CandlePipeline
 import graft.Present.PresentOps
 
 /** Quote-rule orderflow classification and the full tick→candle pipeline —
@@ -50,54 +50,18 @@ object OrderFlow {
   }
 
   /** The reference's entire §3.1 lifecycle as one batch query:
-    * build wire JSON → CAST (C1) → from_json full schema (C2) → explode
-    * feeds (C6) → nested projection (C5) → casts (C9, C10 ms-precision
-    * event_time) → not-null filter (D1) → transform quote arrays (C13) →
-    * sentinel folds (C14) → classify (C15/C16) → tumbling 1-min candle agg
-    * (E2-E8). Reference: data_processor.py:65-165. */
+    * build wire JSON → [[CandlePipeline.parseAndClassify]] → tumbling
+    * 1-min candle agg (E2-E8). Reference: data_processor.py:65-165. */
   def orderflowCandles1m(spark: SparkSession, dir: String): DataFrame = {
     // Single-file scan → conditional repartition so the JSON
     // serialize+parse chain runs on every core, not one straggler task
     // (see Parse.parallelEvents / Tables.spreadForCpu).
     val ticks = TickGen.ticksFromEvents(
       Tables.spreadForCpu(Tables.events(spark, dir)))
-    // explode_outer, not explode: for plain explode Catalyst infers a
-    // size(feeds) > 0 filter and inlines the whole build-JSON+parse-JSON
-    // expression into it BELOW the repartition — doubling the heaviest
-    // expression and running one copy on a single core (measured 3×
-    // from_json in the optimized plan). The outer variant infers nothing;
-    // the D1 not-null filter below drops any null-feed rows, so the
-    // semantics are identical.
-    val parsed = ticks
-      .select(col("event_id"),
-              from_json(col("json_str").cast(StringType), Schemas.tick).as("data"))
-      .select(col("event_id"), explode_outer(col("data.feeds")).as(Seq("instrument", "feed")))
-      .select(
-        col("event_id"),
-        col("instrument"),
-        col("feed.fullFeed.marketFF.ltpc.ltp").as("ltp"),
-        col("feed.fullFeed.marketFF.ltpc.ltq").cast(IntegerType).as("ltq"),
-        col("feed.fullFeed.marketFF.ltpc.ltt").cast(LongType).as("ltt_long"),
-        col("feed.fullFeed.marketFF.marketLevel.bidAskQuote").as("quotes"),
-        col("feed.fullFeed.marketFF.tbq").as("tbq"),
-        col("feed.fullFeed.marketFF.tsq").as("tsq"))
-      // C10: epoch-ms → timestamp preserving ms precision. The reference's
-      // (ltt/1000).cast("timestamp") float path truncates to the µs below
-      // the true ms on some values; timestamp_millis is the exact form of
-      // the same ms-precision semantics (data_processor.py:113-114).
-      .withColumn("event_time",
-                  timestamp_millis(col("ltt_long")).cast(TimestampNTZType))
-      .filter(col("ltq").isNotNull && col("ltp").isNotNull &&
-              col("event_time").isNotNull) // D1
-      .withColumn("bid_prices", transform(col("quotes"), _.getField("bidP")))
-      .withColumn("ask_prices", transform(col("quotes"), _.getField("askP")))
-      .withColumn("best_bid",
-        aggregate(col("bid_prices"), lit(-1.7976931348623157e308),
-                  (acc, x) => when(acc > x, acc).otherwise(x)))
-      .withColumn("best_ask",
-        aggregate(col("ask_prices"), lit(1.7976931348623157e308),
-                  (acc, x) => when(acc < x, acc).otherwise(x)))
-    val flow = classify(parsed)
+    // C10 on the batch side: session-UTC wall clock, like every
+    // declared query's timestamps (DuckDB's naive TIMESTAMP).
+    val flow = CandlePipeline.parseAndClassify(ticks, carry = Seq("event_id"))
+      .withColumn("event_time", col("event_time").cast(TimestampNTZType))
     val ord = Candles.orderKey(col("event_time"), col("event_id"))
     flow
       .groupBy(window(col("event_time"), "1 minute"), col("instrument"))

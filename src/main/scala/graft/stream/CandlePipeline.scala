@@ -39,23 +39,40 @@ import graft.schema.{Candle, Schemas}
   */
 object CandlePipeline {
 
-  /** Parse + project + classify: C1-C16 over a `json_str` column. */
-  def parseAndClassify(ticks: DataFrame): DataFrame = {
-    // explode_outer: prevents InferFiltersFromGenerate from duplicating
-    // the from_json into an inferred size() filter (see
-    // OrderFlow.orderflowCandles1m); null-feed rows die at the D1 filter.
+  /** Tick wire JSON (`json_str`) → one classified row per instrument
+    * feed: from_json full schema (C2) → explode feeds (C6) → nested
+    * projection (C5) → casts (C9, C10 ms-precision `event_time`) →
+    * not-null filter (D1) → transform quote arrays (C13) → sentinel folds
+    * (C14) → classify (C15/C16). Reference: data_processor.py:71-140.
+    * The ONE body behind both [[candles]] and the batch twin
+    * [[OrderFlow.orderflowCandles1m]], so the oracle gate checks the code
+    * the stream runs. `carry` names input columns kept on every feed row
+    * (the batch twin's `event_id`). */
+  def parseAndClassify(ticks: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val kept = carry.map(col)
+    // explode_outer, not explode: for plain explode Catalyst infers a
+    // size(feeds) > 0 filter and inlines the whole build-JSON+parse-JSON
+    // expression into it (in the batch twin, BELOW its repartition) —
+    // doubling the heaviest expression and running one copy on a single
+    // core (measured 3× from_json in the optimized plan). The outer
+    // variant infers nothing; the D1 not-null filter below drops any
+    // null-feed rows, so the semantics are identical.
     val parsed = ticks
-      .select(from_json(col("json_str"), Schemas.tick).as("data"))
-      .select(explode_outer(col("data.feeds")).as(Seq("instrument", "feed")))
-      .select(
+      .select(kept :+ from_json(col("json_str"), Schemas.tick).as("data"): _*)
+      .select(kept :+ explode_outer(col("data.feeds")).as(Seq("instrument", "feed")): _*)
+      .select(kept ++ Seq(
         col("instrument"),
         col("feed.fullFeed.marketFF.ltpc.ltp").as("ltp"),
         col("feed.fullFeed.marketFF.ltpc.ltq").cast(IntegerType).as("ltq"),
         col("feed.fullFeed.marketFF.ltpc.ltt").cast(LongType).as("ltt_long"),
         col("feed.fullFeed.marketFF.marketLevel.bidAskQuote").as("quotes"),
         col("feed.fullFeed.marketFF.tbq").as("tbq"),
-        col("feed.fullFeed.marketFF.tsq").as("tsq"))
-      .withColumn("event_time", timestamp_millis(col("ltt_long"))) // C10
+        col("feed.fullFeed.marketFF.tsq").as("tsq")): _*)
+      // C10: epoch-ms → timestamp preserving ms precision. The reference's
+      // (ltt/1000).cast("timestamp") float path truncates to the µs below
+      // the true ms on some values; timestamp_millis is the exact form of
+      // the same ms-precision semantics (data_processor.py:113-114).
+      .withColumn("event_time", timestamp_millis(col("ltt_long")))
       .filter(col("ltq").isNotNull && col("ltp").isNotNull &&
               col("event_time").isNotNull) // D1
       .withColumn("bid_prices", transform(col("quotes"), _.getField("bidP")))

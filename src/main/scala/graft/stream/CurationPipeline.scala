@@ -29,8 +29,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Scale shape: identical to the batch kernel — one map-only stage,
   * whole-stage codegen, scales with input splits; the only
   * non-codegen'd expressions are the Gopher HOFs, the same cost the
-  * batch gate pays. Throughput is measured as STREAMBENCH's
-  * `curation` leg; endurance as STREAMSOAK's stateless leg.
+  * batch gate pays. CurationStreamSpec pins the stateless plan and
+  * the band-partitioned output.
   */
 object CurationPipeline {
 

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -43,7 +43,7 @@ object Sources {
     kafkaDf.select(col("value").cast(StringType).as("json_str"))
 
   /** (value, timestamp) rate rows → the synthetic event shape TickGen
-    * renders to wire JSON — shared by both rate-source variants. */
+    * renders to wire JSON. */
   private def eventsFromRate(raw: DataFrame): DataFrame = {
     val types = array(Seq("click", "view", "purchase", "refund", "error").map(lit): _*)
     raw.select(
@@ -65,121 +65,4 @@ object Sources {
       spark.readStream.format("rate")
         .option("rowsPerSecond", rowsPerSecond.toLong).load()))
       .select("json_str")
-
-  /** Fixed-size micro-batch base stream (`value` BIGINT + `timestamp`):
-    * every micro-batch carries exactly `rowsPerBatch` rows and triggers
-    * fire back-to-back, so batch durations measure pipeline CAPACITY
-    * directly (the plain rate source under backlog produces ballooning,
-    * incomparable batches). Event time advances 1 s per batch —
-    * watermarks progress, windows close. */
-  def microBatchRows(spark: SparkSession, rowsPerBatch: Long): DataFrame =
-    spark.readStream.format("rate-micro-batch")
-      .option("rowsPerBatch", rowsPerBatch)
-      .option("advanceMillisPerBatch", 1000L).load()
-
-  /** [[microBatchRows]] with a PINNED epoch start — two sources created
-    * this way share an event-time axis exactly (the default start is
-    * "query start time", which differs per source by planning latency:
-    * harmless for single-stream legs, but a stream-stream join's
-    * watermark/range math should not depend on scheduler jitter). */
-  def microBatchRows(spark: SparkSession, rowsPerBatch: Long,
-                     startTimestampMs: Long): DataFrame =
-    spark.readStream.format("rate-micro-batch")
-      .option("rowsPerBatch", rowsPerBatch)
-      .option("startTimestamp", startTimestampMs)
-      .option("advanceMillisPerBatch", 1000L).load()
-
-  /** The tick stream over [[microBatchRows]] — see there for why. */
-  def microBatchTicks(spark: SparkSession, rowsPerBatch: Long): DataFrame =
-    TickGen.ticksFromEvents(eventsFromRate(microBatchRows(spark, rowsPerBatch)))
-      .select("json_str")
-
-  /** A 64-word Gopher-passing body (word count ≥ 50, mean word length
-    * in [3, 10], ≥ 2 required stopwords, all-alphabetic): 4 copies of a
-    * 16-word base sentence. A per-doc variant token appends at
-    * generation time so the classifier hash decorrelates across docs. */
-  private val PassBody: String = {
-    val base = "the quick brown fox jumps over a lazy dog and runs " +
-      "with great speed that day"
-    Seq.fill(4)(base).mkString(" ")
-  }
-
-  /** Synthetic curation documents over [[microBatchRows]] for the
-    * curation leg ([[CurationPipeline]]): even ids carry the Gopher-
-    * passing [[PassBody]], odd ids a 3-word failing stub — so the
-    * quality gate exercises both branches every batch — and every text
-    * ends in a variant token, so the classifier band hash is
-    * uniform-ish across docs rather than 2-valued. */
-  def microBatchDocs(spark: SparkSession, rowsPerBatch: Long): DataFrame =
-    microBatchRows(spark, rowsPerBatch)
-      .select(col("value").as("doc_id"),
-        concat(
-          when(col("value") % 2 === 0, lit(PassBody))
-            .otherwise(lit("short failing stub")),
-          lit(" w"), (col("value") % 9973).cast(StringType)).as("text"))
-
-  /** 20 deterministic pseudo-word tokens from a key: 4 md5 digests
-    * sliced into 6-char tokens. Docs sharing a key share a body; docs
-    * with different keys share NOTHING (random hex) — so near-dup rate
-    * is controlled entirely by key collisions, never by a common
-    * skeleton that would degenerate LSH into one giant bucket (the
-    * documented duplicate-heavy failure mode). */
-  private def dedupBody(key: Column): Column =
-    concat_ws(" ", (0 until 4).flatMap { d =>
-      val h = md5(concat(lit(s"$d:"), key.cast(StringType)))
-      (0 until 5).map(i => h.substr(lit(1 + i * 6), lit(6)))
-    }: _*)
-
-  /** Near-dup bench VECTORS over any id frame — [[nearDupDocs]]'
-    * planting scheme for the embedding modality: ~5% of vectors draw
-    * their 64 dims from one of 1000 shared block keys (NEAR-dups — a
-    * per-vector jitter on dim 0 keeps them off bit-identical, cosine ≈
-    * 0.9999), the rest are novel under `novelOffset`. Dims are
-    * uniform-ish in [-1, 1] from xxhash64(key, dim), so two NOVEL
-    * vectors' cosine concentrates near 0 (σ ≈ 0.125 at 64 dims) — at
-    * the bench leg's cosineMin = 0.8 a false cross-match is a ≥ 6σ
-    * event, which is what makes this the mostly-novel crawl regime:
-    * only the planted 5% verify, ~5 history partners each (the same
-    * hundreds-block key rule as the text corpus, same negation so a
-    * planted key can never collide with a novel one). */
-  def nearDupVecs(ids: DataFrame, idCol: Column,
-                  novelOffset: Long): DataFrame = {
-    val key = when(idCol % 100 < 5,
-        -((idCol / 100).cast("long") % 1000) - 1)
-      .otherwise(idCol + novelOffset)
-    val jitter = (idCol % 997).cast("double") / lit(100000.0)
-    ids.select(idCol.as("vec_id"),
-      transform(sequence(lit(0), lit(63)),
-        i => (pmod(xxhash64(key, i), lit(2001L)) - 1000L).cast("double")
-               / lit(1000.0) +
-             when(i === 0, jitter).otherwise(lit(0.0))).as("v"))
-  }
-
-  /** Near-dup bench corpus over any id frame: ~5% of docs draw their
-    * body from one of 1000 shared keys (NEAR-dups — a trailing
-    * per-doc variant token keeps them off exact-dup, Jaccard ≈ 0.8),
-    * the rest are novel under `novelOffset` (history passes 0, the
-    * stream a disjoint offset, so a novel stream doc can never collide
-    * with a novel history doc — only the planted 5% cross-match, ~5
-    * history partners each: the mostly-novel crawl regime where the
-    * bloom pre-filter ends the funnel for 95% of rows).
-    *
-    * The planted key is derived from the id's HUNDREDS block,
-    * `(id / 100) % 1000`, NOT from `id % 1000` — the latter is
-    * determined by the `id % 100 < 5` gate and collapses to 50 keys
-    * (each planted doc then finds ~100 partners in a 100k history,
-    * a 20× heavier verify stage than the crawl regime this corpus
-    * claims). The block key takes all 1000 values, and with a 100k
-    * history each block contributes exactly 5 planted ids → ~5
-    * partners per stream doc. Keys are negated (−1…−1000) so they
-    * can never collide with a novel key, which is always a
-    * non-negative id (+ offset). */
-  def nearDupDocs(ids: DataFrame, idCol: Column,
-                  novelOffset: Long): DataFrame =
-    ids.select(idCol.as("doc_id"),
-      concat(
-        dedupBody(when(idCol % 100 < 5,
-            -((idCol / 100).cast("long") % 1000) - 1)
-          .otherwise(idCol + novelOffset)),
-        lit(" v"), (idCol % 997).cast(StringType)).as("text"))
 }
