@@ -77,9 +77,16 @@ object CacheScope {
   private[graft] def listenerInstalls: Int = installs.get
 
   /** Persist `df` (MEMORY_AND_DISK) and register it for session-scoped
-    * release. Internal operators use this instead of raw `.persist`. */
+    * release. Internal operators use this instead of raw `.persist`.
+    *
+    * A plan the CacheManager already holds — pinned by an earlier,
+    * unreleased query, or cached by the caller — is returned as is: a
+    * second persist adds no cached data (Spark only warns "Asked to cache
+    * already cached data"), and registering it here would let this
+    * session's release unpersist an entry it does not own. */
   private[graft] def pin(df: DataFrame): DataFrame = {
     purgeStopped()
+    if (df.storageLevel != StorageLevel.NONE) return df
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     ledger.computeIfAbsent(p.sparkSession,
       _ => new ConcurrentLinkedQueue[DataFrame]()).add(p)

@@ -94,14 +94,11 @@ object Bpe {
     // there the K rounds now run INSIDE one task ([[LocalTrain
     // .bpeLocal]], r21: even as coalesce(1) 1-task jobs the loop paid
     // ~33 job launches ≈ 1.8 s of its 2.0 s); a web-scale vocabulary
-    // keeps the distributed width, and [[Iterate.LocalSolveConf]] keeps
-    // that path spec-covered
-    val small = dict0.count() <= 1000000L
-    if (small && Iterate.localSolveEnabled(in.sparkSession))
+    // keeps the distributed width
+    if (Iterate.solveLocally(dict0.count(), Iterate.MaxDictRows))
       return LocalTrain.bpeLocal(dict0, numMerges)
     var dict = withSyms(dict0).localCheckpoint()
     Graph.freeCheckpoint(dict0)
-    if (small) dict = dict.coalesce(1)
     val winners = Seq.newBuilder[DataFrame]
     for (k <- 1 to numMerges) {
       // size guard: Spark's sequence(1, 0) DESCENDS, so a fully-merged

@@ -103,10 +103,8 @@ object Classifier {
     // each of the `rounds` rounds is 2 eager checkpoint jobs over a
     // few-hundred-row feature frame — job scheduling, not math. One
     // task runs the whole loop when the features fit its heap; the
-    // distributed loop stays the at-scale path ([[Iterate]]'s bounds
-    // and conf escape hatch).
-    if (Iterate.localSolveEnabled(feats.sparkSession) &&
-        feats.count() <= Iterate.localSolveMaxRows(feats.sparkSession))
+    // distributed loop stays the at-scale path.
+    if (Iterate.solveLocally(feats.count(), Iterate.MaxGraphRows))
       return LocalTrain.gdLocal(feats, rounds, NumDims, Lr)
     var wF = feats.sparkSession.range(1)
       .select(array(Seq.fill(NumDims)(lit(0.0)): _*).as("w"))

@@ -92,22 +92,20 @@ object Cluster {
     val parts = math.min(sessParts.toLong, (nV max nE) / 1000000L + 1).toInt
     // Two execution regimes, same split as [[Graph.pageRank]]:
     //
-    // LOCAL (parts == 1): the graph fits one partition, so one task runs
+    // LOCAL: the graph fits one partition, so one task runs
     // path-compressed union-find in memory ([[Iterate.ccLocal]]) — exact
     // closure, zero rounds, ~3 jobs total. The r11 regime here
     // (exchange-free single-partition DataFrame rounds) still paid one
     // checkpoint job per pointer-jumping round; specs force the
-    // distributed loop via [[Iterate.LocalSolveConf]] to keep it covered.
+    // distributed loop via [[Iterate.distributedOnly]] to keep it covered.
     //
     // DISTRIBUTED: pointer-jumping min-label rounds; the O(V) label
     // frame broadcasts below the bound and shuffles above it.
     // Heap-bounded like [[Graph.pageRank]]'s switch: the local solver
     // materializes the graph boxed in one task (~120–180 B/row), so the
-    // ceiling is [[Iterate.LocalSolveMaxRowsConf]], not the 1M/task
-    // partition heuristic.
-    if (parts == 1 &&
-        (nV max nE) <= Iterate.localSolveMaxRows(nodes.sparkSession) &&
-        Iterate.localSolveEnabled(nodes.sparkSession)) {
+    // ceiling is [[Iterate.MaxGraphRows]], not the 1M/task partition
+    // heuristic.
+    if (Iterate.solveLocally(nV max nE, Iterate.MaxGraphRows)) {
       // checkpoint the O(V) result so v/sym blocks can be freed now —
       // the returned frame must not re-read them after unpersist
       val out = Iterate.ccLocal(v, symAll).localCheckpoint()

@@ -128,9 +128,10 @@ object Graph {
     // Two execution regimes, picked by the counted size (the same
     // measured-switch discipline as Dedup's bounded-broadcast joins):
     //
-    // LOCAL (parts == 1, the gate + any sub-~1M-row graph): the whole
-    // graph fits ONE partition, so the fastest correct plan is ONE task
-    // that runs the power iteration in memory ([[Iterate.pageRankLocal]])
+    // LOCAL (the gate + any graph within [[Iterate.MaxGraphRows]], which
+    // implies parts == 1): the whole graph fits ONE partition, so the
+    // fastest correct plan is ONE task that runs the power iteration in
+    // memory ([[Iterate.pageRankLocal]])
     // — genuine per-partition imperative logic, the one place
     // mapPartitions beats every declarative shape. The previous regime
     // here (exchange-free single-partition DataFrame rounds, r11) had
@@ -138,20 +139,17 @@ object Graph {
     // round — measured 0.10–0.13 s × 10 rounds of pure job-scheduling
     // overhead on a 20-node graph vs ~0.1 s total for the local solve.
     // The distributed loop below stays the scale path; specs force it
-    // via [[Iterate.LocalSolveConf]] to keep both regimes covered.
+    // via [[Iterate.distributedOnly]] to keep both regimes covered.
     //
     // LARGE: edges keep their scan/shuffle parallelism, the O(V) frames
     // ride broadcast joins below MaxBroadcastRows and the planner's
     // shuffle strategies above, and the dangling scalar is an agg
     // crossed in as a 1-row broadcast (a global window would funnel V
     // rows through one task — fine at gate scale, wrong at 100 TB).
-    // localSolveMaxRows is a STRICTER ceiling than parts == 1: the local
-    // solver holds the graph as boxed values in one task's heap
-    // (~120–180 B/row — see [[Iterate.LocalSolveMaxRowsConf]]), so the
-    // regime switch is bounded by heap, not just by partition math.
-    if (parts == 1 &&
-        (n max nEdges) <= Iterate.localSolveMaxRows(nodes.sparkSession) &&
-        Iterate.localSolveEnabled(nodes.sparkSession)) {
+    // The bound is a STRICTER ceiling than parts == 1: the local solver
+    // holds the graph as boxed values in one task's heap (~120–180 B/row),
+    // so the regime switch is bounded by heap, not by partition math.
+    if (Iterate.solveLocally(n max nEdges, Iterate.MaxGraphRows)) {
       // The solve output is checkpointed so v/e blocks can be freed NOW
       // (the returned frame must not re-read them after unpersist);
       // O(V) rows, same pinned-until-GC lifecycle as the loop's result.

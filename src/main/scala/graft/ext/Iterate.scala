@@ -2,72 +2,88 @@ package graft.ext
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-/** One-task LOCAL solvers for the iterative graph operators' small-graph
+/** The local-vs-distributed regime decision for every iterative operator,
+  * and the one-task LOCAL solvers for the graph operators' small-graph
   * regime ([[Graph.pageRank]], [[Cluster.connectedComponents]]).
   *
-  * Why they exist: below ~1M graph rows the distributed loops' cost is
-  * not computation but JOB COUNT — every round is at least one eager
-  * localCheckpoint job, measured 0.10–0.13 s of scheduling overhead per
-  * round on a 20-node graph (r12's `syndication_pagerank` spent ~1.3 s of
-  * its 4.9 s there). When the whole graph provably fits one partition
-  * (the caller decides from COUNTED sizes, the same measured-switch
-  * discipline as Dedup's bounded-broadcast joins), the fastest correct
-  * plan is one task that materializes the partition and iterates in
-  * memory — genuine per-partition imperative logic, which is exactly the
-  * case where `mapPartitions` is the idiomatic Spark tool rather than a
-  * workaround. The distributed loops remain the ≥1M-row scale path and
-  * keep spec coverage via [[LocalSolveConf]].
+  * Why local solvers exist: below ~1M graph rows the distributed loops'
+  * cost is not computation but JOB COUNT — every round is at least one
+  * eager localCheckpoint job, measured 0.10–0.13 s of scheduling overhead
+  * per round on a 20-node graph (r12's `syndication_pagerank` spent
+  * ~1.3 s of its 4.9 s there). When the whole graph provably fits one
+  * partition, the fastest correct plan is one task that materializes the
+  * partition and iterates in memory — genuine per-partition imperative
+  * logic, which is exactly the case where `mapPartitions` is the
+  * idiomatic Spark tool rather than a workaround.
+  *
+  * The decision: every fork (the two graph operators here, the five
+  * [[LocalTrain]] trainers) calls [[solveLocally]] with a size it COUNTED
+  * and one of three code-owned bounds — [[MaxGraphRows]],
+  * [[MaxVecRows]], [[MaxDictRows]]. No deployment setting moves them; the
+  * distributed loops stay the scale path above the bounds, and specs
+  * cover them on test-sized inputs through [[distributedOnly]].
   *
   * Input convention: both solvers take the operator's already-hygienic
   * CHECKPOINTED frames (dedup'd edges, closure-semi-joined to the node
   * set), tag node rows and edge rows into one narrow union, and coalesce
   * it to a single partition — one narrow read of the checkpoint blocks,
   * no shuffle, no driver-side collect (the graph lives in an executor
-  * task, bounded by the caller's ~1M-row regime check).
+  * task, bounded by [[MaxGraphRows]]).
   */
 private[graft] object Iterate {
 
-  /** Session conf that forces the DISTRIBUTED loop regardless of graph
-    * size — how the specs keep the scale path covered on test-sized
-    * graphs (and an operational escape hatch if a caller would rather
-    * pay round jobs than a 1-partition task). */
-  val LocalSolveConf = "spark.graft.iterative.localSolve"
-
-  def localSolveEnabled(spark: SparkSession): Boolean =
-    spark.conf.get(LocalSolveConf, "true").toBoolean
-
-  /** Row ceiling for the local regime, DISTINCT from (and stricter than)
-    * the generic ~1M-rows-per-task partition heuristic the distributed
-    * loops size themselves by. The solvers hold the whole graph as boxed
-    * values in one task's heap — ids + edge endpoints + two HashMaps ≈
-    * 120–180 bytes/row — so 1M rows would be ~150 MB of single-task heap:
-    * survivable on this harness's executors, but an avoidable OOM risk on
-    * small-executor deployments sitting just below the regime switch. At
-    * the 200k default the local graph is ≤ ~35 MB and the job-count
-    * saving the regime exists for (0.10–0.13 s/round of scheduling
-    * overhead) is already fully captured — gate graphs are O(100–10k)
-    * rows, and a graph above 200k rows amortizes round-job overhead fine
-    * distributed. Conf'd for operators who have measured their heap. */
-  val LocalSolveMaxRowsConf = "spark.graft.iterative.localSolveMaxRows"
-
-  def localSolveMaxRows(spark: SparkSession): Long =
-    spark.conf.get(LocalSolveMaxRowsConf, "200000").toLong
+  /** Row ceiling for the graph and feature-frame local regimes
+    * ([[pageRankLocal]], [[ccLocal]], [[LocalTrain.gdLocal]]), stricter
+    * than the ~1M-rows-per-task partition heuristic the distributed loops
+    * size themselves by. The solvers hold the whole input as boxed values
+    * in one task's heap — ids + edge endpoints + two HashMaps ≈ 120–180
+    * bytes/row — so 1M rows would be ~150 MB of single-task heap, an
+    * avoidable OOM risk on small executors. At 200k the local graph is
+    * ≤ ~35 MB and the job-count saving the regime exists for is already
+    * fully captured: gate graphs are O(100–10k) rows, and a graph above
+    * 200k rows amortizes round-job overhead fine distributed. */
+  val MaxGraphRows = 200000L
 
   /** Row ceiling for the VECTOR local regime ([[LocalTrain.lloydLocal]]):
-    * distinct from the graph bound because each row carries a dense
-    * double array, not two scalars — at the 65536 default with the gate
-    * fixtures' 64-dim vectors the one-task state is ≤ ~34 MB of primitive
-    * doubles (the solver parses rows into unboxed Array[Double]), the
-    * same order as the graph regime's ~35 MB budget. Above the bound the
-    * distributed Lloyd loop amortizes its round jobs fine. */
-  val LocalSolveMaxVecRowsConf = "spark.graft.iterative.localSolveMaxVecRows"
+    * each row carries a dense double array, not two scalars — at 65,536
+    * rows of the gate fixtures' 64-dim vectors the one-task state is
+    * ≤ ~34 MB of primitive doubles, the same order as the graph regime's
+    * budget. Above it the distributed Lloyd loop amortizes its round
+    * jobs fine. */
+  val MaxVecRows = 65536L
 
-  def localSolveMaxVecRows(spark: SparkSession): Long =
-    spark.conf.get(LocalSolveMaxVecRowsConf, "65536").toLong
+  /** Row ceiling for the DICTIONARY local regimes ([[LocalTrain.bpeLocal]],
+    * [[LocalTrain.unigramLocal]]): distinct (word, count) rows — a
+    * gate-scale vocabulary fits one task; a web-scale one keeps the
+    * distributed width. */
+  val MaxDictRows = 1000000L
+
+  /** Set only inside [[distributedOnly]], on the calling thread. Not
+    * inheritable: a pool thread first started inside the scope must not
+    * keep the forced answer after it. */
+  private val forceDistributed =
+    ThreadLocal.withInitial[java.lang.Boolean](() => false)
+
+  /** The one regime predicate: solve in one task when the counted `rows`
+    * fit `bound`. `rows` is by-name so a forced-distributed run does not
+    * pay the count job. Every caller decides on the driver thread while
+    * it builds the plan (the counts are eager), which is what lets
+    * [[distributedOnly]] reach it. */
+  def solveLocally(rows: => Long, bound: Long): Boolean =
+    !forceDistributed.get && rows <= bound
+
+  /** Run `body` with every [[solveLocally]] decision it makes on this
+    * thread answering false — how specs cover the distributed loops on
+    * test-sized inputs. Not reachable from any deployment setting. */
+  private[graft] def distributedOnly[T](body: => T): T = {
+    val prev = forceDistributed.get
+    forceDistributed.set(true)
+    try body finally forceDistributed.set(prev)
+  }
 
   /** External-row values of orderable Spark SQL types (numerics, Decimal,
     * Date, Timestamp) implement Comparable with the natural order Spark's

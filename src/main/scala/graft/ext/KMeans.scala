@@ -101,9 +101,7 @@ object KMeans {
     // is 2 eager checkpoint jobs; below the vector bound one task runs
     // every round. KMeans is the one-group instance of [[Pq]]'s grouped
     // Lloyd loop, so both share the solver (sub pinned to 0 here).
-    val spark = vecs.sparkSession
-    if (Iterate.localSolveEnabled(spark) &&
-        vecs.count() <= Iterate.localSolveMaxVecRows(spark)) {
+    if (Iterate.solveLocally(vecs.count(), Iterate.MaxVecRows)) {
       val (cb, upd) = LocalTrain.lloydLocal(
         vecs.select(lit(0L).as("sub"), col("v").as("sv")),
         codebook0.select(lit(0L).as("sub"), col("cell"), col("cv")),

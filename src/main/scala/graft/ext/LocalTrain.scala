@@ -19,10 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * scheduling overhead per job on this harness, which at gate scale is
   * >80% of each trainer's wall-clock (bpe_merges: ~1.8 s of 2.0 s).
   * When the loop state provably fits one partition (the caller decides
-  * from COUNTED sizes, [[Iterate]]'s measured-switch discipline), the
-  * fastest correct plan is one task that materializes the state and
-  * iterates in memory. The distributed loops remain the at-scale path
-  * and keep spec coverage via [[Iterate.LocalSolveConf]].
+  * through [[Iterate.solveLocally]] from a COUNTED size against
+  * [[Iterate.MaxGraphRows]], [[Iterate.MaxVecRows]] or
+  * [[Iterate.MaxDictRows]]), the fastest correct plan is one task that
+  * materializes the state and iterates in memory. The distributed loops
+  * remain the at-scale path and keep spec coverage via
+  * [[Iterate.distributedOnly]].
   *
   * Parity is the design constraint, not an afterthought: every solver
   * replays the distributed loop's EXACT arithmetic — the same native

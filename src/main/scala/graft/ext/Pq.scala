@@ -53,9 +53,7 @@ object Pq {
     // counted local regime ([[LocalTrain.lloydLocal]], r21) — the
     // grouped Lloyd loop's rounds collapse into one task below the
     // vector bound; [[KMeans.loopFrom]] shares the same solver.
-    val spark = subVecs.sparkSession
-    if (Iterate.localSolveEnabled(spark) &&
-        subVecs.count() <= Iterate.localSolveMaxVecRows(spark))
+    if (Iterate.solveLocally(subVecs.count(), Iterate.MaxVecRows))
       return LocalTrain.lloydLocal(
         subVecs.select(col("sub"), col("sv")),
         subVecs.filter(col("vec_id") < k)

@@ -119,16 +119,14 @@ object Unigram {
   /** Train on `in` (needs a `text` column); returns the final costed
     * piece table (piece, n, cost). */
   def trainFrame(in: DataFrame): DataFrame = {
-    var wd = wordDict(in).localCheckpoint()
+    val wd = wordDict(in).localCheckpoint()
     // the [[Bpe.trainBpeFrame]] two-regime split: a gate-scale
     // dictionary runs the WHOLE seed+EM chain inside one task
     // ([[LocalTrain.unigramLocal]] — r21: the 1-task-job spelling still
     // paid ~11 job launches per training); the distributed loop is the
-    // web-scale path, spec-covered via [[Iterate.LocalSolveConf]]
-    val small = wd.count() <= 1000000L
-    if (small && Iterate.localSolveEnabled(in.sparkSession))
+    // web-scale path
+    if (Iterate.solveLocally(wd.count(), Iterate.MaxDictRows))
       return LocalTrain.unigramLocal(wd, MaxPieceLen, SeedMulti, PruneSchedule)
-    if (small) wd = wd.coalesce(1)
     var vocab = seedVocab(wd).localCheckpoint()
     for (k <- PruneSchedule) {
       val art = artifact(withCosts(vocab)).localCheckpoint() // 1 row

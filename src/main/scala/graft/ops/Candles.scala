@@ -49,14 +49,17 @@ object Candles {
     unix_millis(ts.cast(TimestampType)) * lit(1000000L) + guarded
   }
 
-  /** Generic tumbling OHLC: group rows into `windowDur` buckets of `ts`
-    * per `keys`, emitting open/high/low/close/volume/n_trades.
+  /** Generic OHLC: group rows into `windowDur` buckets of `ts` starting
+    * every `slideDur` (default: tumbling, `slideDur` = `windowDur`) per
+    * `keys`, emitting open/high/low/close/volume/n_trades.
     */
   def ohlc(df: DataFrame, ts: Column, id: Column, value: Column,
-           keys: Seq[(String, Column)], windowDur: String): DataFrame = {
+           keys: Seq[(String, Column)], windowDur: String,
+           slideDur: Option[String] = None): DataFrame = {
     val ord = orderKey(ts, id)
     val keyCols = keys.map { case (n, c) => c.as(n) }
-    df.groupBy((window(ts, windowDur) +: keyCols): _*)
+    val win = window(ts, windowDur, slideDur.getOrElse(windowDur))
+    df.groupBy((win +: keyCols): _*)
       .agg(
         min_by(value, ord).as("open"),
         max(value).as("high"),
@@ -107,20 +110,8 @@ object Candles {
     */
   def candlesSliding(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val ord = orderKey(col("ts"), col("event_id"))
-    ev.groupBy(window(col("ts"), "5 minutes", "1 minute"),
-               col("event_type"))
-      .agg(
-        min_by(col("value"), ord).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), ord).as("close"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("volume"),
-        count(lit(1)).as("n_trades"))
-      .select(col("window.start").as("window_start"),
-              col("window.end").as("window_end"), col("event_type"),
-              col("open"), col("high"), col("low"), col("close"),
-              col("volume"), col("n_trades"))
+    ohlc(ev, col("ts"), col("event_id"), col("value"),
+         Seq("event_type" -> col("event_type")), "5 minutes", Some("1 minute"))
       .presentSorted(col("window_start"), col("event_type"))
   }
 

@@ -50,8 +50,9 @@ object OrderFlow {
   }
 
   /** The reference's entire §3.1 lifecycle as one batch query:
-    * build wire JSON → [[CandlePipeline.parseAndClassify]] → tumbling
-    * 1-min candle agg (E2-E8). Reference: data_processor.py:65-165. */
+    * build wire JSON → [[CandlePipeline.parseAndClassify]] →
+    * [[CandlePipeline.candleAgg]] over tumbling 1-min windows (E2-E8).
+    * Reference: data_processor.py:65-165. */
   def orderflowCandles1m(spark: SparkSession, dir: String): DataFrame = {
     // Single-file scan → conditional repartition so the JSON
     // serialize+parse chain runs on every core, not one straggler task
@@ -62,25 +63,8 @@ object OrderFlow {
     // declared query's timestamps (DuckDB's naive TIMESTAMP).
     val flow = CandlePipeline.parseAndClassify(ticks, carry = Seq("event_id"))
       .withColumn("event_time", col("event_time").cast(TimestampNTZType))
-    val ord = Candles.orderKey(col("event_time"), col("event_id"))
-    flow
-      .groupBy(window(col("event_time"), "1 minute"), col("instrument"))
-      .agg(
-        min_by(col("ltp"), ord).as("open"),
-        max(col("ltp")).as("high"),
-        min(col("ltp")).as("low"),
-        max_by(col("ltp"), ord).as("close"),
-        sum(col("buy_volume")).as("buy_volume"),
-        sum(col("sell_volume")).as("sell_volume"),
-        (sum(col("buy_volume")) + sum(col("sell_volume"))).as("total_volume"), // E7
-        sum(col("delta")).as("delta"),
-        max_by(col("tbq"), ord).as("tbq"),  // E5: last tbq, event-time order
-        max_by(col("tsq"), ord).as("tsq"))
-      .select(col("window.start").as("window_start"),
-              col("window.end").as("window_end"),
-              col("instrument"), col("open"), col("high"), col("low"),
-              col("close"), col("buy_volume"), col("sell_volume"),
-              col("total_volume"), col("delta"), col("tbq"), col("tsq"))
+    CandlePipeline.candleAgg(flow,
+        Candles.orderKey(col("event_time"), col("event_id")), "1 minute")
       .presentSorted(col("window_start"), col("instrument"))
   }
 

@@ -53,24 +53,23 @@ import org.apache.spark.sql.types._
   * (strict bounds are a subset of the closed cover, so they only ever
   * filter more).
   *
-  * Always-on when it matches (disable with
-  * `spark.graft.rewriteRangeJoin.enabled=false`): even when one side is
-  * small enough that BNLJ would survive, the rewritten join is still
-  * eligible for broadcast-hash on the bucketed key, so the rewrite
-  * trades at worst a constant factor for removing the quadratic cliff.
+  * Always-on when it matches: even when one side is small enough that
+  * BNLJ would survive, the rewritten join is still eligible for
+  * broadcast-hash on the bucketed key, so the rewrite trades at worst a
+  * constant factor for removing the quadratic cliff.
   *
   * This is the (c)-tier extension mechanism end-to-end: a
   * `Rule[LogicalPlan]` injected via `SparkSessionExtensions`
   * (`injectOptimizerRule`, [[graft.functions.GraftExtensions]]) — no
-  * private Spark API.
+  * private Spark API. The injection lands in the operator-optimization
+  * batch, so Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.RewriteRangeJoin`
+  * switches it off (the specs' naive reference plan).
   */
 class RewriteRangeJoin extends Rule[LogicalPlan] {
 
-  private val FlagKey = "spark.graft.rewriteRangeJoin.enabled"
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(FlagKey, "true").toBoolean) plan
-    else plan.transformUp {
+    plan.transformUp {
       case j: Join if j.joinType == Inner && j.condition.isDefined =>
         rewrite(j).getOrElse(j)
     }

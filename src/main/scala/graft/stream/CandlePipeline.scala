@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -92,20 +92,30 @@ object CandlePipeline {
   def candles(ticks: DataFrame,
               windowDur: String = "1 minute",
               watermark: String = "5 minutes"): DataFrame =
-    parseAndClassify(ticks)
-      .withWatermark("event_time", watermark) // E1
+    candleAgg(
+      parseAndClassify(ticks).withWatermark("event_time", watermark), // E1
+      col("ltt_long"), windowDur)
+
+  /** E2-E8 over [[parseAndClassify]]'s rows: `windowDur` tumbling
+    * windows per instrument, open/close and the last tbq/tsq ordered by
+    * `ord`. The ONE aggregate behind [[candles]] (ordered by `ltt_long`,
+    * see the ordering note above) and the batch twin
+    * [[OrderFlow.orderflowCandles1m]] (ordered by
+    * [[graft.ops.Candles.orderKey]]). */
+  def candleAgg(flow: DataFrame, ord: Column, windowDur: String): DataFrame =
+    flow
       .groupBy(window(col("event_time"), windowDur), col("instrument")) // E2
       .agg(
-        min_by(col("ltp"), col("ltt_long")).as("open"),    // E3 (deterministic)
+        min_by(col("ltp"), ord).as("open"),                // E3 (deterministic)
         max(col("ltp")).as("high"),                        // E4
         min(col("ltp")).as("low"),
-        max_by(col("ltp"), col("ltt_long")).as("close"),   // E5
+        max_by(col("ltp"), ord).as("close"),               // E5
         sum(col("buy_volume")).as("buy_volume"),           // E6
         sum(col("sell_volume")).as("sell_volume"),
         (sum(col("buy_volume")) + sum(col("sell_volume"))).as("total_volume"), // E7
         sum(col("delta")).as("delta"),
-        max_by(col("tbq"), col("ltt_long")).as("tbq"),
-        max_by(col("tsq"), col("ltt_long")).as("tsq"))
+        max_by(col("tbq"), ord).as("tbq"),
+        max_by(col("tsq"), ord).as("tsq"))
       .select( // E8: flatten the window struct
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),

@@ -39,11 +39,8 @@ class ClusterSpec extends AnyFunSuite {
     * pointer-jumping loop (the ≥1M-row scale path) on test-sized graphs;
     * the round-budget contract only exists on this path. */
   private def runDistributed(n: Seq[Long], e: Seq[(Long, Long)],
-                             maxRounds: Int = 25): Map[Long, Long] = {
-    spark.conf.set(graft.ext.Iterate.LocalSolveConf, "false")
-    try run(n, e, maxRounds)
-    finally spark.conf.unset(graft.ext.Iterate.LocalSolveConf)
-  }
+                             maxRounds: Int = 25): Map[Long, Long] =
+    graft.ext.Iterate.distributedOnly(run(n, e, maxRounds))
 
   test("labels equal the union-find witness on a mixed graph") {
     // two cliques, a bridge, a chain, isolated nodes, a self-loop, dup +
@@ -99,8 +96,9 @@ class ClusterSpec extends AnyFunSuite {
     val clean = Seq[(Long, Long)]((1, 2), (2, 3), (5, 6))
     val dirty = clean ++ Seq[(Long, Long)]((1, 99), (99, 2), (98, 97))
     val want = witness(nodes, clean)
-    assert(runDistributed(nodes, dirty) === want)
-    assert(run(nodes, dirty) === want)
+    val (local, dist) = TestSpark.bothRegimes(run(nodes, dirty))
+    assert(dist === want)
+    assert(local === want)
   }
 
   test("string ids: local min-label agrees with Spark's UTF-8 byte order") {
@@ -118,10 +116,7 @@ class ClusterSpec extends AnyFunSuite {
     def labels(): Map[String, String] =
       Cluster.connectedComponents(nodes, edges)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val local = labels()
-    spark.conf.set(graft.ext.Iterate.LocalSolveConf, "false")
-    val dist = try labels()
-               finally spark.conf.unset(graft.ext.Iterate.LocalSolveConf)
+    val (local, dist) = TestSpark.bothRegimes(labels())
     assert(local === dist)
     assert(local.values.toSet === Set(bmp)) // the UTF-8 minimum, not UTF-16's
   }
@@ -208,28 +203,12 @@ class ClusterSpec extends AnyFunSuite {
     // result) ≈ 3 jobs each + setup stage jobs + the collect. r11's
     // per-round shape measured 29 on this chain; a return of per-round
     // jobs in the small-graph path lands back there.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            "clusterspec-job-pin" == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup("clusterspec-job-pin", "job-count pin")
-    try {
-      val nodes = (1L to 64L)
-      val edges = (1L until 64L).map(i => (i, i + 1))
+    val nodes = (1L to 64L)
+    val edges = (1L until 64L).map(i => (i, i + 1))
+    val (_, n) = TestSpark.countJobs(
       Cluster.connectedComponents(nodes.toDF("id"), edges.toDF("src", "dst"))
-        .collect()
-      Thread.sleep(500)
-      val n = jobs.get()
-      assert(n <= 25, s"connectedComponents scheduled $n jobs on a 64-chain" +
-        " — the small-graph path is amplifying jobs again")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+        .collect())
+    assert(n <= 25, s"connectedComponents scheduled $n jobs on a 64-chain" +
+      " — the small-graph path is amplifying jobs again")
   }
 }

@@ -35,15 +35,6 @@ class GraphSpec extends AnyFunSuite {
     Graph.pageRank(nodes.toDF("id"), edges.toDF("src", "dst"), iters)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
-  /** Run with the one-task local solve disabled — covers the distributed
-    * loop (the ≥1M-row scale path) on test-sized graphs. */
-  private def runDistributed(nodes: Seq[Long], edges: Seq[(Long, Long)],
-                             iters: Int): Map[Long, Double] = {
-    spark.conf.set(graft.ext.Iterate.LocalSolveConf, "false")
-    try run(nodes, edges, iters)
-    finally spark.conf.unset(graft.ext.Iterate.LocalSolveConf)
-  }
-
   private def assertClose(a: Map[Long, Double], b: Map[Long, Double]): Unit = {
     assert(a.keySet == b.keySet)
     for (k <- a.keySet)
@@ -86,11 +77,10 @@ class GraphSpec extends AnyFunSuite {
     // topology included
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L)
     val edges = Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 5L))
-    val got = runDistributed(nodes, edges, iters = 10)
+    val (local, got) = TestSpark.bothRegimes(run(nodes, edges, iters = 10))
     assertClose(got, witness(nodes, edges, iters = 10))
     assert(math.abs(got.values.sum - 1.0) < 1e-9)
     // and both regimes agree with each other bit-for-bit at ppm grain
-    val local = run(nodes, edges, iters = 10)
     for (k <- local.keySet)
       assert(math.abs(local(k) - got(k)) < 1e-9)
   }
@@ -98,42 +88,21 @@ class GraphSpec extends AnyFunSuite {
   test("small-graph regime runs ~one job per round, not r10's amplification") {
     // r10 shipped 12 s isolated from ~5 jobs × 10 rounds × bench reps;
     // the single-partition regime must hold the line at one
-    // checkpoint job per round plus a handful of setup jobs. The
-    // listener bus is async, so wait briefly and assert an UPPER bound
-    // (late events can only undercount, which never flakes the test).
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        // suites share the session and may run in parallel — count only
-        // jobs tagged with this test's job group
-        if (j.properties != null &&
-            "graphspec-job-pin" == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup("graphspec-job-pin", "job-count pin")
-    try {
-      val nodes = (1L to 30L)
-      val edges = nodes.flatMap(i => Seq((i, i % 30 + 1), (i, (i * 7) % 30 + 1)))
-      run(nodes, edges.distinct, iters = 10)
-      Thread.sleep(500)
-      val n = jobs.get()
-      // The small-graph path is now the one-task LOCAL solve: 3 eager
-      // localCheckpoints (v, e, result — ~3 jobs each incl. the
-      // materialization) plus AQE stage jobs for the setup's
-      // distinct/semi-join exchanges and the collect ≈ 15 measured.
-      // History: r11's exchange-free single-partition rounds ran ~50
-      // (one checkpoint job per round); before that 92; r10's
-      // per-round crossJoin/anti-join shape was worse still. A return
-      // above this bound means per-round jobs are back in the
-      // small-graph path.
-      assert(n <= 25, s"pageRank(iters=10) scheduled $n jobs — " +
-        "the small-graph path is amplifying jobs again (r10 regression)")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+    // checkpoint job per round plus a handful of setup jobs.
+    val nodes = (1L to 30L)
+    val edges = nodes.flatMap(i => Seq((i, i % 30 + 1), (i, (i * 7) % 30 + 1)))
+    val (_, n) = TestSpark.countJobs(run(nodes, edges.distinct, iters = 10))
+    // The small-graph path is now the one-task LOCAL solve: 3 eager
+    // localCheckpoints (v, e, result — ~3 jobs each incl. the
+    // materialization) plus AQE stage jobs for the setup's
+    // distinct/semi-join exchanges and the collect ≈ 15 measured.
+    // History: r11's exchange-free single-partition rounds ran ~50
+    // (one checkpoint job per round); before that 92; r10's
+    // per-round crossJoin/anti-join shape was worse still. A return
+    // above this bound means per-round jobs are back in the
+    // small-graph path.
+    assert(n <= 25, s"pageRank(iters=10) scheduled $n jobs — " +
+      "the small-graph path is amplifying jobs again (r10 regression)")
   }
 
   test("syndication gate projection: dense positions, ppm mass conserved") {

@@ -3,12 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.Iterate
-
 /** The r21 local-trainer regimes ([[graft.ext.LocalTrain]]) must be
   * BIT-IDENTICAL to the distributed loops they replace — same rows,
   * same values, for every trainer family. Each test runs the same gate
-  * query under both regimes (the [[GraphSpec]] conf-toggle pattern) and
+  * query under both regimes ([[TestSpark.bothRegimes]]) and
   * compares collected rows exactly: these are the frames the DuckDB
   * oracles hash, so "close" is not good enough. */
 class LocalTrainSpec extends AnyFunSuite {
@@ -21,17 +19,8 @@ class LocalTrainSpec extends AnyFunSuite {
       case x => x
     })
 
-  private def bothRegimes(q: => DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-    val local = rows(q)
-    spark.conf.set(Iterate.LocalSolveConf, "false")
-    val dist =
-      try rows(q)
-      finally spark.conf.unset(Iterate.LocalSolveConf)
-    (local, dist)
-  }
-
   private def assertSame(name: String, q: => DataFrame): Unit = {
-    val (local, dist) = bothRegimes(q)
+    val (local, dist) = TestSpark.bothRegimes(rows(q))
     assert(local.nonEmpty, s"$name: empty result")
     assert(local == dist, s"$name: local regime diverges from distributed")
   }

@@ -55,9 +55,10 @@ object RangeJoinProps extends Properties("graft.RewriteRangeJoin") {
         .select(col("err_id"), col("click_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val on = run()
-      spark.conf.set("spark.graft.rewriteRangeJoin.enabled", "false")
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+                     "graft.plans.RewriteRangeJoin")
       val off = try run()
-        finally spark.conf.unset("spark.graft.rewriteRangeJoin.enabled")
+        finally spark.conf.unset("spark.sql.optimizer.excludedRules")
       // also cross-check one engine-independent witness: brute force
       val brute = (for {
         (lo, li) <- ls.zipWithIndex; (ro, ri) <- rs.zipWithIndex

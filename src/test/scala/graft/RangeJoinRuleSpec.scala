@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class RangeJoinRuleSpec extends AnyFunSuite {
   import TestSpark.{spark, sfDir}
 
-  private val Flag = "spark.graft.rewriteRangeJoin.enabled"
+  /** Spark's stock switch for an optimizer rule: the naive reference
+    * plan is the query with the rule excluded. */
+  private val Off =
+    "spark.sql.optimizer.excludedRules" -> "graft.plans.RewriteRangeJoin"
   private val Bcast = "spark.sql.autoBroadcastJoinThreshold"
 
   /** The naive formulation: inequality-only condition, no buckets. */
@@ -46,7 +49,7 @@ class RangeJoinRuleSpec extends AnyFunSuite {
                rewritten.contains("ShuffledHashJoin"), rewritten)
       assert(rewritten.contains("Generate explode"), rewritten) // anchor ×2
 
-      withConf(Flag -> "false") { // negative control: the quadratic plan
+      withConf(Off) { // negative control: the quadratic plan
         val off = naive().queryExecution.executedPlan.toString
         assert(off.contains("BroadcastNestedLoopJoin") ||
                  off.contains("CartesianProduct"), off)
@@ -62,16 +65,8 @@ class RangeJoinRuleSpec extends AnyFunSuite {
     assert(on.nonEmpty) // the comparison must actually exercise matches
   }
 
-  private def withConfCollect() = {
-    val old = spark.conf.getOption(Flag)
-    try {
-      spark.conf.set(Flag, "false")
-      naive().orderBy(col("err_id"), col("click_id")).collect()
-    } finally old match {
-      case Some(v) => spark.conf.set(Flag, v)
-      case None    => spark.conf.unset(Flag)
-    }
-  }
+  private def withConfCollect() =
+    withConf2(Off)(naive().orderBy(col("err_id"), col("click_id")).collect())
 
   test("calendar-interval width (make_interval) fires the rewrite too") {
     // `make_interval(...)` analyzes to TimestampAddInterval over a
@@ -123,7 +118,7 @@ class RangeJoinRuleSpec extends AnyFunSuite {
       assert(plan.contains("Generate explode"), plan)
     }
     val on = trailing().orderBy(col("err_id"), col("click_id")).collect()
-    val off = withConf2(Flag -> "false") {
+    val off = withConf2(Off) {
       trailing().orderBy(col("err_id"), col("click_id")).collect()
     }
     assert(on.length === off.length, s"on=${on.length} off=${off.length}")

@@ -7,7 +7,9 @@ Reports, for the checkout at CHECKOUT (default: this repository):
   - lines of main and test Scala (`src/main`, `src/test`);
   - the sorted set of `SPARK_GRAFT_*` environment options named under
     `src/main`;
-  - the sorted set of `spark.graft.*` conf keys named under `src/main`.
+  - the sorted set of `spark.graft.*` conf keys named under `src/main`;
+  - duplicate paths: every call site of the local-vs-distributed regime
+    predicate `Iterate.solveLocally` under `src/main`, as file:line.
 
 Every change reports this before and after, so a growing option surface
 or line count shows up in review rather than after the fact.
@@ -18,6 +20,7 @@ import sys
 
 ENV_RE = re.compile(r"\bSPARK_GRAFT_[A-Z0-9_]+")
 CONF_RE = re.compile(r"\"(spark\.graft\.[A-Za-z0-9_.]+)\"")
+FORK_RE = re.compile(r"(?<!def )\bsolveLocally\(")
 
 
 def scala_files(root: pathlib.Path):
@@ -41,6 +44,12 @@ def main() -> int:
     print(f"conf_keys {len(confs)}")
     for c in confs:
         print(f"  {c}")
+    forks = [f"{f.relative_to(repo)}:{n}" for f in main_files
+             for n, line in enumerate(texts[f].splitlines(), 1)
+             if FORK_RE.search(line)]
+    print(f"duplicate_paths {len(forks)}")
+    for f in forks:
+        print(f"  {f}")
     return 0
 
 
