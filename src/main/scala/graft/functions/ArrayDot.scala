@@ -102,20 +102,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
                   s"$name expects 2 arguments, got ${children.length}")
           build(children(0), children(1))
         }))
+    def unary(name: String, cls: Class[_], build: Expression => Expression): Unit =
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == 1,
+                  s"$name expects 1 argument, got ${children.length}")
+          build(children(0))
+        }))
     binary("array_dot", classOf[ArrayDot], ArrayDot(_, _))
     binary("jaccard_sim", classOf[JaccardSim], JaccardSim(_, _))
     binary("char_ngrams", classOf[CharNGrams], CharNGrams(_, _))
     binary("word_ngrams", classOf[WordNGrams], WordNGrams(_, _))
     binary("word_window_md5", classOf[WordWindowMd5], WordWindowMd5(_, _))
     binary("bpe_encode", classOf[BpeEncode], BpeEncode(_, _))
-    ext.injectFunction((
-      new FunctionIdentifier("ilog2_fp"),
-      new ExpressionInfo(classOf[ILog2Fp].getName, "ilog2_fp"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-                s"ilog2_fp expects 1 argument, got ${children.length}")
-        ILog2Fp(children(0))
-      }))
+    unary("tick_feeds", classOf[TickFeeds], TickFeeds(_))
+    unary("ilog2_fp", classOf[ILog2Fp], ILog2Fp(_))
     ext.injectFunction((
       new FunctionIdentifier("unigram_encode"),
       new ExpressionInfo(classOf[UnigramEncode].getName, "unigram_encode"),
@@ -124,14 +127,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
                 s"unigram_encode expects 3 arguments, got ${children.length}")
         UnigramEncode(children(0), children(1), children(2))
       }))
-    ext.injectFunction((
-      new FunctionIdentifier("hadamard_rotate"),
-      new ExpressionInfo(classOf[HadamardRotate].getName, "hadamard_rotate"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-                s"hadamard_rotate expects 1 argument, got ${children.length}")
-        HadamardRotate(children(0))
-      }))
+    unary("hadamard_rotate", classOf[HadamardRotate], HadamardRotate(_))
     ext.injectFunction((
       new FunctionIdentifier("strided_min_md5"),
       new ExpressionInfo(classOf[StridedMinMd5].getName, "strided_min_md5"),

@@ -87,8 +87,8 @@ object Candles {
   }
 
   /** 5-minute variant (the reference documents 5/15-minute configs,
-    * README.md:252-255) keyed by user bucket to exercise a different
-    * grouping cardinality.
+    * README.md:252-255): the same `event_type` grouping as
+    * [[candles1m]], over 5-minute tumbling windows.
     */
   def candles5m(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)

@@ -11,6 +11,11 @@ import org.apache.spark.sql.types._
   *    the `feeds → fullFeed → marketFF → ltpc → ltt` path — the engine must
   *    tolerate parsing a subset of fields from identical JSON
   *    (reference: tick_to_hdfs.py:32-42)
+  *  - [[tickCandle]]: the partial schema the candle leg reads (`feeds` →
+  *    `fullFeed` → `marketFF` → `ltpc{ltp, ltt, ltq}`,
+  *    `marketLevel.bidAskQuote[{bidP, askP}]`, `tbq`, `tsq`); the native
+  *    [[graft.functions.TickFeeds]] parse is defined by
+  *    `tick_feeds(j) ≡ from_json(j, tickCandle).feeds` for every string `j`
   *  - [[candle]]: the flat 13-column candle record
   *    (reference: candle_to_hdfs.py:11-25), with timestamps as
   *    TIMESTAMP_NTZ per the engine's UTC-naive policy (see graft.Tables)
@@ -70,6 +75,29 @@ object Schemas {
   val tickLtt: StructType = {
     val ltpcLtt = StructType(Seq(StructField("ltt", StringType)))
     val mff     = StructType(Seq(StructField("ltpc", ltpcLtt)))
+    val full    = StructType(Seq(StructField("marketFF", mff)))
+    val feedVal = StructType(Seq(StructField("fullFeed", full)))
+    StructType(Seq(StructField("feeds", MapType(StringType, feedVal))))
+  }
+
+  /** Partial schema: only the fields `CandlePipeline.parseAndClassify`
+    * reads. With Spark's partial results on, an unread malformed field
+    * cannot change a read one, so the read fields equal the full
+    * [[tick]] parse's (TickFeedsProps checks this). */
+  val tickCandle: StructType = {
+    val ltpcRead = StructType(Seq(
+      StructField("ltp", DoubleType),
+      StructField("ltt", StringType),
+      StructField("ltq", StringType)))
+    val quote = StructType(Seq(
+      StructField("bidP", DoubleType),
+      StructField("askP", DoubleType)))
+    val mff = StructType(Seq(
+      StructField("ltpc", ltpcRead),
+      StructField("marketLevel", StructType(Seq(
+        StructField("bidAskQuote", ArrayType(quote))))),
+      StructField("tbq", DoubleType),
+      StructField("tsq", DoubleType)))
     val full    = StructType(Seq(StructField("marketFF", mff)))
     val feedVal = StructType(Seq(StructField("fullFeed", full)))
     StructType(Seq(StructField("feeds", MapType(StringType, feedVal))))

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.TickFeeds
 import graft.ops.OrderFlow
-import graft.schema.{Candle, Schemas}
+import graft.schema.Candle
 
 /** The reference's core streaming pipeline (§3.1 of SURVEY.md), wired for
   * Structured Streaming: tick JSON → parse → explode feeds → orderflow
@@ -40,10 +41,12 @@ import graft.schema.{Candle, Schemas}
 object CandlePipeline {
 
   /** Tick wire JSON (`json_str`) → one classified row per instrument
-    * feed: from_json full schema (C2) → explode feeds (C6) → nested
-    * projection (C5) → casts (C9, C10 ms-precision `event_time`) →
-    * not-null filter (D1) → transform quote arrays (C13) → sentinel folds
-    * (C14) → classify (C15/C16). Reference: data_processor.py:71-140.
+    * feed: `tick_feeds` parse of the fields read here (C2,
+    * [[graft.functions.TickFeeds]], ≡ `from_json(json_str,
+    * Schemas.tickCandle).feeds`) → explode feeds (C6) → nested projection
+    * (C5) → casts (C9, C10 ms-precision `event_time`) → not-null filter
+    * (D1) → quote price arrays (C13) → sentinel folds (C14) → classify
+    * (C15/C16). Reference: data_processor.py:71-140.
     * The ONE body behind both [[candles]] and the batch twin
     * [[OrderFlow.orderflowCandles1m]], so the oracle gate checks the code
     * the stream runs. `carry` names input columns kept on every feed row
@@ -58,8 +61,8 @@ object CandlePipeline {
     // variant infers nothing; the D1 not-null filter below drops any
     // null-feed rows, so the semantics are identical.
     val parsed = ticks
-      .select(kept :+ from_json(col("json_str"), Schemas.tick).as("data"): _*)
-      .select(kept :+ explode_outer(col("data.feeds")).as(Seq("instrument", "feed")): _*)
+      .select(kept :+ explode_outer(TickFeeds(col("json_str")))
+                        .as(Seq("instrument", "feed")): _*)
       .select(kept ++ Seq(
         col("instrument"),
         col("feed.fullFeed.marketFF.ltpc.ltp").as("ltp"),
@@ -75,8 +78,8 @@ object CandlePipeline {
       .withColumn("event_time", timestamp_millis(col("ltt_long")))
       .filter(col("ltq").isNotNull && col("ltp").isNotNull &&
               col("event_time").isNotNull) // D1
-      .withColumn("bid_prices", transform(col("quotes"), _.getField("bidP")))
-      .withColumn("ask_prices", transform(col("quotes"), _.getField("askP")))
+      .withColumn("bid_prices", col("quotes.bidP"))
+      .withColumn("ask_prices", col("quotes.askP"))
       .withColumn("best_bid",
         aggregate(col("bid_prices"), lit(-1.7976931348623157e308),
                   (acc, x) => when(acc > x, acc).otherwise(x)))

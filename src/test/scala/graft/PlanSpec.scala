@@ -35,6 +35,17 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
+  test("the candle leg parses each tick once, with tick_feeds and no from_json") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import spark.implicits._
+    val plan = stream.CandlePipeline.parseAndClassify(Seq("{}").toDF("json_str"))
+      .queryExecution.optimizedPlan
+    def count(p: PartialFunction[Any, Unit]): Int =
+      plan.flatMap(_.expressions.flatMap(_.collect(p))).size
+    assert(count { case _: functions.TickFeeds => } === 1, plan)
+    assert(count { case _: JsonToStructs => } === 0, plan)
+  }
+
   test("candle aggregation shuffles exactly once (partial + final HashAggregate)") {
     // executedPlan: exchanges are only inserted by EnsureRequirements
     val plan = ops.Candles.candles1m(spark, sfDir)
