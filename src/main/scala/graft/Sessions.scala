@@ -51,17 +51,15 @@ object Sessions {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
               "true")
       // Post-shuffle partition size target for the size-first coalescing
-      // above. SCALE-PARAMETERIZED (env), never a hard-coded host
-      // constant: the default 64m targets I/O-bound batch ETL, but this
+      // above. The default 64m targets I/O-bound batch ETL, but this
       // engine's mid-size exchanges carry CPU-dense rows (md5 digests,
       // token positions, vector structs) where 64 MB of input is tens of
       // core-seconds — on the gate corpus that coalesces real work onto
       // one task. 4m keeps such stages a handful of tasks while KB-sized
-      // flag/agg exchanges still collapse to one; a production deployment
-      // overrides via SPARK_GRAFT_ADVISORY_SHUFFLE (64m–256m per guide
-      // §9) where per-byte CPU cost is amortized by real data volume.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-              sys.env.getOrElse("SPARK_GRAFT_ADVISORY_SHUFFLE", "4m"))
+      // flag/agg exchanges still collapse to one. A constant: this method
+      // builds only `local[...]` sessions; a cluster deployment sets its
+      // own target (64m–256m per guide §9) with `--conf`.
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
       .config("spark.ui.enabled", "false")
       // Some testdata generations store events.ts as TIMESTAMP(NANOS);
       // Spark has no nanos timestamp type, so surface it as BIGINT and

@@ -21,8 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.schema.Schemas
 
-/** The candle leg's tick parse: `tick_feeds(j)` ≡
+/** The stream's tick parse: `tick_feeds(j)` ≡
   * `from_json(j, Schemas.tickCandle).feeds` for every input string `j`.
+  * Both fan-out legs read it: the candle leg
+  * (`CandlePipeline.parseAndClassify`) and the tick archive
+  * (`ArchivalPipeline.tickArchival`), and so do their batch twins.
   *
   * `from_json` decodes each record through a new `InputStreamReader` and
   * pays `JacksonParser`'s fixed set-up on every nested object; on the

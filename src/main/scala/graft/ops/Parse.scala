@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 import graft.schema.Schemas
 import graft.sources.TickGen
+import graft.stream.ArchivalPipeline
 import graft.Present.PresentOps
 
 /** JSON parse surface — C1-C5, C9, C11, C12 of SURVEY.md §2.
@@ -67,33 +68,28 @@ object Parse {
       .presentSorted(col("event_id"))
   }
 
-  /** Partial-schema parse (reference: tick_to_hdfs.py:28,45-51): same JSON,
-    * schema declares only the ltt path (C3); instrument via map_keys[0]
-    * (C7); feed via element_at with a column key (C8); epoch-s truncation
-    * to_timestamp((ltt/1000) CAST LONG) (C11 — deliberately coarser than
-    * C10's ms precision); to_date for partitioning (C12). */
+  /** Partial-schema parse (reference: tick_to_hdfs.py:28,45-51): the
+    * bronze archive leg's own body, [[ArchivalPipeline.tickArchival]]
+    * (`tick_feeds` over the same JSON, C3; instrument via map_keys[0],
+    * C7; feed via element_at with a column key, C8; epoch-s truncation
+    * (ltt/1000) CAST LONG, C11 — deliberately coarser than C10's ms
+    * precision), then to_date for partitioning (C12). */
   def tickParsePartial(spark: SparkSession, dir: String): DataFrame = {
     val ticks = TickGen.ticksFromEvents(parallelEvents(spark, dir))
-    ticks
-      .select(col("event_id"),
-              from_json(col("json_str"), Schemas.tickLtt).as("json_data"))
-      .withColumn("instrument", element_at(map_keys(col("json_data.feeds")), 1))
-      .withColumn("feed", element_at(col("json_data.feeds"), col("instrument")))
-      .withColumn(
-        "tick_time",
-        timestamp_seconds((col("feed.fullFeed.marketFF.ltpc.ltt").cast(DoubleType)
-          / 1000).cast(LongType)).cast(TimestampNTZType))
+    ArchivalPipeline.tickArchival(ticks, carry = Seq("event_id"))
+      .withColumn("tick_time", col("tick_time").cast(TimestampNTZType))
       .withColumn("date", to_date(col("tick_time")))
       .select("event_id", "instrument", "tick_time", "date")
       .presentSorted(col("event_id"))
   }
 
-  /** Flat candle parse (reference: candle_to_hdfs.py:45-47): 13 typed
-    * columns out of flat JSON (C4), including TIMESTAMP round trips. */
+  /** Flat candle parse (reference: candle_to_hdfs.py:45-47): the silver
+    * archive leg's own body, [[ArchivalPipeline.candleArchival]] — 13
+    * typed columns out of flat JSON (C4), including TIMESTAMP round
+    * trips. */
   def tickParseFlat(spark: SparkSession, dir: String): DataFrame = {
     val js = TickGen.candleJsonFromEvents(parallelEvents(spark, dir))
-    js.select(col("event_id"), from_json(col("json_str"), Schemas.candle).as("c"))
-      .select(col("event_id"), col("c.*"))
+    ArchivalPipeline.candleArchival(js, carry = Seq("event_id"))
       .presentSorted(col("event_id"))
   }
 

@@ -7,15 +7,14 @@ import org.apache.spark.sql.types._
   *
   *  - [[tick]]: the full 6-deep nested market tick
   *    (reference: data_processor.py:20-63)
-  *  - [[tickLtt]]: the PARTIAL schema for the same messages, declaring only
-  *    the `feeds → fullFeed → marketFF → ltpc → ltt` path — the engine must
-  *    tolerate parsing a subset of fields from identical JSON
-  *    (reference: tick_to_hdfs.py:32-42)
-  *  - [[tickCandle]]: the partial schema the candle leg reads (`feeds` →
-  *    `fullFeed` → `marketFF` → `ltpc{ltp, ltt, ltq}`,
-  *    `marketLevel.bidAskQuote[{bidP, askP}]`, `tbq`, `tsq`); the native
-  *    [[graft.functions.TickFeeds]] parse is defined by
-  *    `tick_feeds(j) ≡ from_json(j, tickCandle).feeds` for every string `j`
+  *  - [[tickCandle]]: the PARTIAL schema for the same messages (C3): only
+  *    the fields the stream reads (`feeds` → `fullFeed` → `marketFF` →
+  *    `ltpc{ltp, ltt, ltq}`, `marketLevel.bidAskQuote[{bidP, askP}]`,
+  *    `tbq`, `tsq`). Both fan-out legs parse ticks with the native
+  *    [[graft.functions.TickFeeds]], defined by
+  *    `tick_feeds(j) ≡ from_json(j, tickCandle).feeds` for every string
+  *    `j`; the archive leg uses its `ltt` path, as the reference's
+  *    ltt-only schema does (reference: tick_to_hdfs.py:32-42)
   *  - [[candle]]: the flat 13-column candle record
   *    (reference: candle_to_hdfs.py:11-25), with timestamps as
   *    TIMESTAMP_NTZ per the engine's UTC-naive policy (see graft.Tables)
@@ -70,20 +69,11 @@ object Schemas {
         StructField("requestMode", StringType)))))))),
     StructField("currentTs", StringType)))
 
-  /** Partial schema: only the ltt path, proving schema-pruned parse of the
-    * same messages. */
-  val tickLtt: StructType = {
-    val ltpcLtt = StructType(Seq(StructField("ltt", StringType)))
-    val mff     = StructType(Seq(StructField("ltpc", ltpcLtt)))
-    val full    = StructType(Seq(StructField("marketFF", mff)))
-    val feedVal = StructType(Seq(StructField("fullFeed", full)))
-    StructType(Seq(StructField("feeds", MapType(StringType, feedVal))))
-  }
-
-  /** Partial schema: only the fields `CandlePipeline.parseAndClassify`
-    * reads. With Spark's partial results on, an unread malformed field
-    * cannot change a read one, so the read fields equal the full
-    * [[tick]] parse's (TickFeedsProps checks this). */
+  /** Partial schema: only the fields the two stream legs read
+    * (`CandlePipeline.parseAndClassify`, `ArchivalPipeline.tickArchival`).
+    * With Spark's partial results on, an unread malformed field cannot
+    * change a read one, so the read fields equal the full [[tick]]
+    * parse's (TickFeedsProps checks this). */
   val tickCandle: StructType = {
     val ltpcRead = StructType(Seq(
       StructField("ltp", DoubleType),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.schema.Schemas
 import graft.stream.{ArchivalPipeline, Sinks}
 
 /** The archival entry points (§3.2/§3.3) end-to-end over MemoryStream,
@@ -44,6 +45,46 @@ class ArchivalSpec extends AnyFunSuite {
     assert(back.select("instrument").as[String].collect().toSet === Set("I1", "I2"))
     // bronze keeps the raw message verbatim
     assert(back.filter(col("json_str") === tickJson("I1", T0)).count() === 1)
+  }
+
+  test("tick archival keeps malformed ticks verbatim, routed as the full-schema parse routes them") {
+    val good = tickJson("I1", T0)
+    val inputs = Seq(
+      good.replace("\"ltp\":100.0", "\"ltp\":\"abc\""),          // ltp not a number
+      good.replace(s"\"ltt\":\"$T0\"", s"\"ltt\":$T0"),           // ltt as a number
+      good.replace("\"marketFF\":{", "\"marketFF\":42,\"x\":{"),   // marketFF a scalar
+      tickJson("INÉ9", T0 + 1000),                                  // non-ASCII key
+      good.dropRight(12),                                           // truncated
+      """{"type":"live_feed","feeds":[{"I1":1}],"currentTs":"1"}""", // feeds an array
+      "not json")
+    assert(inputs.distinct.size === inputs.size)
+    val input = MemoryStream[String]
+    val bronze = ArchivalPipeline.tickArchival(
+      input.toDF().select(col("value").as("json_str")))
+    val out  = Files.createTempDirectory("graft_bronze_bad_out").toString
+    val ckpt = Files.createTempDirectory("graft_bronze_bad_ckpt").toString
+    val q = Sinks.partitionedParquetSink(bronze, dateFrom = "tick_time",
+        path = out, checkpoint = ckpt, trigger = Trigger.ProcessingTime(0)).start()
+    try {
+      input.addData(inputs: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("json_str", "instrument", "tick_time").collect()
+        .map(r => (r.getString(0), Option(r.getString(1)), Option(r.get(2))))
+        .sortBy(_._1).toSeq
+    val back = rows(spark.read.parquet(out))
+    assert(back.map(_._1) === inputs.sorted, "json_str not kept verbatim, once each")
+    val full = inputs.toDF("json_str")
+      .withColumn("feeds", from_json(col("json_str"), Schemas.tick).getField("feeds"))
+      .withColumn("instrument", element_at(map_keys(col("feeds")), 1))
+      .withColumn("tick_time", to_timestamp((element_at(col("feeds"), col("instrument"))
+        .getField("fullFeed").getField("marketFF").getField("ltpc").getField("ltt")
+        .cast("double") / 1000).cast("long")))
+    assert(back === rows(full))
+    // the well-formed fields still route: not every row collapsed to null
+    assert(back.count(_._2.isDefined) >= 4, back)
   }
 
   test("candle archival: flat typed parse feeds the sorted partitioned sink") {

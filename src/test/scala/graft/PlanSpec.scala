@@ -35,15 +35,29 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
-  test("the candle leg parses each tick once, with tick_feeds and no from_json") {
+  /** The tick parse nodes in `leg`'s optimized plan: (`tick_feeds`
+    * count, `from_json` count, the plan). The input is a column, not a
+    * local row, which the optimizer would fold the whole leg into. */
+  private def tickParses(leg: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
-    import spark.implicits._
-    val plan = stream.CandlePipeline.parseAndClassify(Seq("{}").toDF("json_str"))
-      .queryExecution.optimizedPlan
+    import org.apache.spark.sql.functions.col
+    val ticks = spark.range(1).select(col("id").cast("string").as("json_str"))
+    val plan = leg(ticks).queryExecution.optimizedPlan
     def count(p: PartialFunction[Any, Unit]): Int =
       plan.flatMap(_.expressions.flatMap(_.collect(p))).size
-    assert(count { case _: functions.TickFeeds => } === 1, plan)
-    assert(count { case _: JsonToStructs => } === 0, plan)
+    (count { case _: functions.TickFeeds => }, count { case _: JsonToStructs => }, plan)
+  }
+
+  test("the candle leg parses each tick once, with tick_feeds and no from_json") {
+    val (tickFeeds, fromJson, plan) = tickParses(stream.CandlePipeline.parseAndClassify(_))
+    assert(tickFeeds === 1, plan)
+    assert(fromJson === 0, plan)
+  }
+
+  test("the tick archive parses each tick once, with tick_feeds and no from_json") {
+    val (tickFeeds, fromJson, plan) = tickParses(stream.ArchivalPipeline.tickArchival(_))
+    assert(tickFeeds === 1, plan)
+    assert(fromJson === 0, plan)
   }
 
   test("candle aggregation shuffles exactly once (partial + final HashAggregate)") {
