@@ -17,37 +17,18 @@ import org.apache.spark.sql.{Column, DataFrame}
   * executed twice, and the global order is identical to `orderBy`'s.
   *
   * Contract: presentation sorts over results KNOWN to be small — gate
-  * outputs here are 1–45 k rows. It is deliberately not a general sort:
-  * a full-scale sorted extract (e.g. [[ops.Layout]]'s sorted parquet)
-  * must range-sort so the sort itself distributes, and there the
-  * sampling pass is the correct price. Rule of thumb: if the result
-  * wouldn't fit one executor, use `orderBy`.
-  *
-  * NOTE — per-doc-output queries: a minority of gate queries emit one row
-  * per corpus document (Text.normalize / tokenCount / fingerprint,
-  * Privacy.redaction, Corpus.clean / packShards / docChunks,
-  * Decontam.decontaminate, the cast/parse scalar ops). At gate scale
-  * (≤60 k docs) they are squarely inside the contract; pointed at a
-  * production corpus their presentation sort would funnel every row
-  * through one task. For that deployment set [[RangeSortConf]] = true on
-  * the session: every presentation sort then plans a plain distributed
-  * `orderBy` (same global order, range exchange, sampling pass and all) —
-  * the ONE switch flips all call sites, so a library caller cannot be
-  * silently bitten by a repartition(1) hidden in a specific operator.
-  * PlanSpec pins both plan shapes.
+  * outputs here are 1–45 k rows, per-document outputs included (≤60 k
+  * docs at gate scale). It is deliberately not a general sort, and it
+  * has no distributed mode: a caller whose result is corpus-scale calls
+  * `orderBy` itself, so the sort distributes and the sampling pass is
+  * the correct price (e.g. [[ops.Layout]]'s sorted parquet). Rule of
+  * thumb: if the result wouldn't fit one executor, use `orderBy`.
+  * PlanSpec pins the single-partition plan shape.
   */
 object Present {
 
-  /** Session conf: `true` ⇒ presentation sorts plan a distributed range
-    * sort (`orderBy`) instead of the single-partition local sort. Set it
-    * when result sizes are corpus-scale rather than gate-scale. */
-  val RangeSortConf = "spark.graft.present.rangeSort"
-
   def sorted(df: DataFrame, cols: Column*): DataFrame =
-    if (df.sparkSession.conf.get(RangeSortConf, "false").toBoolean)
-      df.orderBy(cols: _*)
-    else
-      df.repartition(1).sortWithinPartitions(cols: _*)
+    df.repartition(1).sortWithinPartitions(cols: _*)
 
   /** `df.presentSorted(cols…)` — chainable spelling of [[sorted]], so a
     * terminal `.orderBy(…)` migrates without restructuring the chain. */

@@ -6,38 +6,33 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 
-/** Distributed BPE tokenizer TRAINING (Sennrich et al. 2016) — the
-  * canonical big-data tokenizer workload: learn a merge list from the
-  * corpus, then encode anything with the tiny stored artifact (the
-  * native [[graft.functions.BpeEncode]] expression). No reference-repo
+/** BPE tokenizer TRAINING (Sennrich et al. 2016) — the canonical
+  * big-data tokenizer workload: learn a merge list from the corpus, then
+  * encode anything with the tiny stored artifact (the native
+  * [[graft.functions.BpeEncode]] expression). No reference-repo
   * counterpart; this is the training-data-pipeline surface.
   *
   * The classic trick that makes this tractable: BPE trains on the WORD
   * DICTIONARY (distinct word, frequency), never the raw corpus — the
   * corpus is scanned ONCE to build the dictionary (one O(distinct
   * words) exchange, partial agg collapses hot words map-side), and all
-  * [[NumMerges]] rounds then run at vocabulary economics. Per round:
+  * [[NumMerges]] rounds then run at vocabulary economics, inside one
+  * task ([[LocalTrain.bpeLocal]]). Per round:
   *
-  *   - pair counts: explode adjacent symbol pairs weighted by word
-  *     frequency → one O(distinct pairs) aggregate;
-  *   - winner: `orderBy(cnt desc, a, b).limit(1)` — plans
-  *     TakeOrderedAndProject (a top-1 heap, never a full sort), ties
-  *     broken by byte order identically in both engines;
-  *   - apply: the 1-row winner LEFT-cross-joins the dictionary (left,
-  *     so an exhausted pair space keeps the dictionary instead of
-  *     emptying it) and a codegen'd `aggregate` HOF folds each word's
-  *     symbol array, merging non-overlapping (a,b) occurrences
-  *     left-to-right. The fold cannot cascade within a round (a merged
-  *     symbol is strictly longer than the pair's left side), which is
-  *     exactly [[graft.functions.BpeEncode]]'s pass and the oracle's
-  *     `replace()` semantics — three spellings of one definition.
+  *   - pair counts: adjacent symbol pairs weighted by word frequency;
+  *   - winner: max count, ties broken by byte order identically in both
+  *     engines;
+  *   - apply: every word's symbols merge the winner's non-overlapping
+  *     (a,b) occurrences left-to-right. The pass cannot cascade within a
+  *     round (a merged symbol is strictly longer than the pair's left
+  *     side), which is exactly [[graft.functions.BpeEncode]]'s pass and
+  *     the oracle's `replace()` semantics — three spellings of one
+  *     definition.
   *
-  * Loop hygiene is [[Graph.pageRank]]'s: each round's dictionary is
-  * localCheckpoint'd (lineage would otherwise stack K rounds of HOFs
-  * onto one plan) and the superseded round's blocks are freed; the
-  * per-round winner frames are 1-row checkpoints unioned into the
-  * merge table at the end — the driver never sees a pair (no collect
-  * anywhere; even the winner stays a DataFrame).
+  * Loop hygiene: there is no loop in the plan. The dictionary feeds one
+  * task that runs every round in memory, so a query starts no job while
+  * it is built and none per round; the task fails the query when the
+  * dictionary holds more than [[LocalTrain.MaxDictRows]] words.
   *
   * The DuckDB oracle is the [[Graph]]-style UNROLLED form: K generated
   * rounds of (pairs → top-1 → `replace`) CTEs over a delimiter-framed
@@ -53,31 +48,13 @@ object Bpe {
 
   private[ext] val NumMerges = 16
 
-  /** (word, n) — the word-frequency dictionary. */
-  private def wordDict(in: DataFrame): DataFrame =
+  /** (word, n) — the word-frequency dictionary both tokenizers train
+    * on ([[Unigram.trainFrame]] too). */
+  private[ext] def wordDict(in: DataFrame): DataFrame =
     in
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
-
-  /** Per-code-point initial symbols for the distributed loop (the local
-    * solver segments code points natively). */
-  private def withSyms(dict: DataFrame): DataFrame =
-    dict.withColumn("syms",
-      transform(sequence(lit(1), length(col("word"))),
-        i => col("word").substr(i, lit(1))))
-
-  /** One left-to-right non-overlapping merge pass as a codegen'd fold;
-    * null pair (exhausted pair space) is the identity. */
-  private def mergePass(syms: Column, a: Column, b: Column): Column =
-    when(a.isNull, syms).otherwise(
-      aggregate(syms, array().cast(ArrayType(StringType)),
-        (acc, s) =>
-          when(size(acc) > 0 &&
-               element_at(acc, -1) === a && s === b,
-               concat(slice(acc, lit(1), size(acc) - 1),
-                      array(concat(a, b))))
-            .otherwise(concat(acc, array(s)))))
 
   /** Train `numMerges` merges; returns (rank, a, b) — the stored
     * artifact [[graft.functions.BpeEncode]] consumes. */
@@ -87,44 +64,8 @@ object Bpe {
 
   /** Frame-level trainer: `in` needs a `text` column. */
   def trainBpeFrame(in: DataFrame,
-                    numMerges: Int = NumMerges): DataFrame = {
-    val dict0 = wordDict(in).localCheckpoint()
-    // two-regime split, the [[Cluster.connectedComponents]] pattern
-    // (counted, not guessed): a gate-scale VOCABULARY fits one task —
-    // there the K rounds now run INSIDE one task ([[LocalTrain
-    // .bpeLocal]], r21: even as coalesce(1) 1-task jobs the loop paid
-    // ~33 job launches ≈ 1.8 s of its 2.0 s); a web-scale vocabulary
-    // keeps the distributed width
-    if (Iterate.solveLocally(dict0.count(), Iterate.MaxDictRows))
-      return LocalTrain.bpeLocal(dict0, numMerges)
-    var dict = withSyms(dict0).localCheckpoint()
-    Graph.freeCheckpoint(dict0)
-    val winners = Seq.newBuilder[DataFrame]
-    for (k <- 1 to numMerges) {
-      // size guard: Spark's sequence(1, 0) DESCENDS, so a fully-merged
-      // or single-char word must not reach the pair transform
-      val pairs = dict
-        .filter(size(col("syms")) >= 2)
-        .select(col("n"),
-          explode(transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("a"),
-                        element_at(col("syms"), i + 1).as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-      val top = pairs.orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).select(col("a"), col("b"))
-        .localCheckpoint() // 1 row; must outlive this round's dict
-      val next = dict.join(broadcast(top), lit(true), "left")
-        .select(col("word"), col("n"),
-                mergePass(col("syms"), col("a"), col("b")).as("syms"))
-        .localCheckpoint()
-      Graph.freeCheckpoint(dict)
-      dict = next
-      winners += top.select(lit(k.toLong).as("rank"), col("a"), col("b"))
-    }
-    Graph.freeCheckpoint(dict)
-    winners.result().reduce(_ unionByName _)
-  }
+                    numMerges: Int = NumMerges): DataFrame =
+    LocalTrain.bpeLocal(wordDict(in), numMerges)
 
   /** Gate query: the learned merge table itself. */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =

@@ -6,9 +6,9 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-/** The local-vs-distributed regime decision for every iterative operator,
-  * and the one-task LOCAL solvers for the graph operators' small-graph
-  * regime ([[Graph.pageRank]], [[Cluster.connectedComponents]]).
+/** The local-vs-distributed regime decision for the forked iterative
+  * operators, and the one-task LOCAL solvers for the graph operators'
+  * small-graph regime ([[Graph.pageRank]], [[Cluster.connectedComponents]]).
   *
   * Why local solvers exist: below ~1M graph rows the distributed loops'
   * cost is not computation but JOB COUNT — every round is at least one
@@ -20,12 +20,17 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * logic, which is exactly the case where `mapPartitions` is the
   * idiomatic Spark tool rather than a workaround.
   *
-  * The decision: every fork (the two graph operators here, the five
-  * [[LocalTrain]] trainers) calls [[solveLocally]] with a size it COUNTED
-  * and one of three code-owned bounds — [[MaxGraphRows]],
-  * [[MaxVecRows]], [[MaxDictRows]]. No deployment setting moves them; the
-  * distributed loops stay the scale path above the bounds, and specs
-  * cover them on test-sized inputs through [[distributedOnly]].
+  * The decision: every fork — five of them, the two graph operators
+  * here and three trainers ([[Classifier]]'s GD, [[KMeans]] and [[Pq]]'s
+  * Lloyd loops, solved by [[LocalTrain.gdLocal]] and
+  * [[LocalTrain.lloydLocal]]) — calls [[solveLocally]] with a size it
+  * COUNTED and one of two code-owned bounds, [[MaxGraphRows]] or
+  * [[MaxVecRows]]. Their inputs are data-sized, so both sides are real.
+  * No deployment setting moves the bounds; the distributed loops stay the
+  * scale path above them, and specs cover them on test-sized inputs
+  * through [[distributedOnly]]. The dictionary trainers ([[Bpe]],
+  * [[Unigram]]) are not forks: their state is vocabulary-sized, and they
+  * always train in one task under [[LocalTrain.MaxDictRows]].
   *
   * Input convention: both solvers take the operator's already-hygienic
   * CHECKPOINTED frames (dedup'd edges, closure-semi-joined to the node
@@ -55,12 +60,6 @@ private[graft] object Iterate {
     * budget. Above it the distributed Lloyd loop amortizes its round
     * jobs fine. */
   val MaxVecRows = 65536L
-
-  /** Row ceiling for the DICTIONARY local regimes ([[LocalTrain.bpeLocal]],
-    * [[LocalTrain.unigramLocal]]): distinct (word, count) rows — a
-    * gate-scale vocabulary fits one task; a web-scale one keeps the
-    * distributed width. */
-  val MaxDictRows = 1000000L
 
   /** Set only inside [[distributedOnly]], on the calling thread. Not
     * inheritable: a pool thread first started inside the scope must not

@@ -7,42 +7,76 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-task LOCAL solvers for the iterative TRAINER operators' small-state
-  * regime — [[Iterate]]'s job-count argument applied beyond graphs.
+/** One-task LOCAL solvers for the iterative TRAINER operators —
+  * [[Iterate]]'s job-count argument applied beyond graphs.
   *
-  * Why they exist (r21 measurement): below the counted regime bound the
-  * trainer loops' cost is not computation but JOB COUNT. Every round of
-  * [[Bpe.trainBpeFrame]] (16 rounds), [[Unigram.trainFrame]] (4 EM
-  * rounds), [[Classifier]]'s GD loop (8 rounds) and the [[KMeans]]/[[Pq]]
-  * Lloyd loops (3–4 rounds) runs 1–2 eager localCheckpoint jobs over a
+  * Why they exist (r21 measurement): at gate scale the trainer loops'
+  * cost is not computation but JOB COUNT. Every round of a distributed
+  * trainer loop runs 1–2 eager localCheckpoint jobs over a
   * dictionary/vocabulary/codebook of a few hundred rows — 0.05–0.13 s of
-  * scheduling overhead per job on this harness, which at gate scale is
-  * >80% of each trainer's wall-clock (bpe_merges: ~1.8 s of 2.0 s).
-  * When the loop state provably fits one partition (the caller decides
-  * through [[Iterate.solveLocally]] from a COUNTED size against
-  * [[Iterate.MaxGraphRows]], [[Iterate.MaxVecRows]] or
-  * [[Iterate.MaxDictRows]]), the fastest correct plan is one task that
-  * materializes the state and iterates in memory. The distributed loops
-  * remain the at-scale path and keep spec coverage via
-  * [[Iterate.distributedOnly]].
+  * scheduling overhead per job on this harness, which at gate scale was
+  * >80% of each trainer's wall-clock (bpe_merges: ~1.8 s of 2.0 s). The
+  * fastest correct plan is one task that materializes the state and
+  * iterates in memory.
   *
-  * Parity is the design constraint, not an afterthought: every solver
-  * replays the distributed loop's EXACT arithmetic — the same native
-  * kernels ([[graft.functions.UnigramEncode.compute]],
+  * Two kinds of solver live here:
+  *
+  *   - the DICTIONARY trainers [[bpeLocal]] and [[unigramLocal]] are the
+  *     only trainers of their families ([[Bpe.trainBpeFrame]],
+  *     [[Unigram.trainFrame]]). They train on the word-count dictionary,
+  *     whose size is the vocabulary, not the corpus — the single-process
+  *     design of Sennrich et al.'s BPE and of SentencePiece. Each checks
+  *     [[MaxDictRows]] as it reads rows, inside its task, and fails the
+  *     query loudly above it;
+  *   - the FORKED solvers [[gdLocal]] ([[Classifier]]'s GD) and
+  *     [[lloydLocal]] ([[KMeans]]/[[Pq]]'s Lloyd loop) take data-sized
+  *     inputs. Their callers pick them through [[Iterate.solveLocally]]
+  *     from a COUNTED size against [[Iterate.MaxGraphRows]] or
+  *     [[Iterate.MaxVecRows]]; the distributed loops stay the at-scale
+  *     path and keep spec coverage via [[Iterate.distributedOnly]].
+  *
+  * Parity is the design constraint for the forked pair: each replays the
+  * distributed loop's EXACT arithmetic — strict left-to-right IEEE dots
+  * ([[graft.functions.ArrayDot]]'s order), integer fixed-point sums
+  * (order-free), and Spark's own orderings (doubles with NaN-largest /
+  * −0.0 = 0.0) — so both regimes produce bit-identical frames
+  * (LocalTrainSpec pins each pair). The dictionary trainers share their
+  * kernels with the encoders ([[graft.functions.UnigramEncode.compute]],
   * [[graft.functions.ILog2Fp.compute]], [[graft.functions.BpeEncode]]'s
-  * merge pass), strict left-to-right IEEE dots ([[graft.functions
-  * .ArrayDot]]'s order), integer fixed-point sums (order-free), and
-  * Spark's own orderings (strings compare as UTF-8 bytes via UTF8String,
-  * doubles with NaN-largest / −0.0 = 0.0) — so both regimes produce
-  * bit-identical frames (LocalTrainSpec pins each pair; the DuckDB
-  * oracles gate them end-to-end).
+  * merge pass) and order strings as Spark does (UTF-8 bytes via
+  * UTF8String); the DuckDB oracles are their independent reference.
   *
-  * Input convention ([[Iterate]]'s): callers pass already-hygienic
-  * frames; each solver coalesces the ~hundreds-of-rows input to ONE
-  * partition and runs the whole multi-round loop inside `mapPartitions`
-  * — one narrow read, no shuffle, no driver-side collect.
+  * Input convention ([[Iterate]]'s): each solver coalesces its input to
+  * ONE partition and runs the whole multi-round loop inside
+  * `mapPartitions` — one narrow read, no driver-side collect.
   */
 private[graft] object LocalTrain {
+
+  /** Row ceiling for the dictionary trainers ([[bpeLocal]],
+    * [[unigramLocal]]): distinct (word, count) rows. The solvers hold the
+    * whole dictionary in one task's heap, and the bound keeps that heap
+    * small; the gate corpus has 31 distinct words. Past the bound the
+    * query fails with the bound in its message. */
+  val MaxDictRows = 1000000L
+
+  /** The (word, n) dictionary rows of one task, failing it when more
+    * than [[MaxDictRows]] arrive. The message names the bound and the
+    * dictionary's full size: the rows past the bound are counted, not
+    * kept. */
+  private def readDict(it: Iterator[Row]): (ArrayBuffer[String], ArrayBuffer[Long]) = {
+    val words = ArrayBuffer.empty[String]
+    val freqs = ArrayBuffer.empty[Long]
+    while (it.hasNext) {
+      val r = it.next()
+      if (words.length >= MaxDictRows)
+        throw new IllegalArgumentException(
+          s"word dictionary has ${words.length + 1L + it.size} distinct " +
+          s"words, more than the $MaxDictRows a one-task trainer holds " +
+          "(LocalTrain.MaxDictRows)")
+      words += r.getString(0); freqs += r.getLong(1)
+    }
+    (words, freqs)
+  }
 
   /** Spark's UTF-8-byte string order ([[Iterate]]'s cmp rationale:
     * java.lang.String orders by UTF-16 code unit, which disagrees for
@@ -88,22 +122,20 @@ private[graft] object LocalTrain {
   // ---------------------------------------------------------------- BPE
 
   /** [[Bpe.trainBpeFrame]]'s K-round merge loop in one task over the
-    * (word, n) dictionary; emits the identical (rank, a, b) winner rows:
-    * per round, pair counts weighted by word frequency, winner = max
-    * count with ties broken by (a, b) UTF-8 byte order, then one
-    * left-to-right non-overlapping merge pass per word (the codegen'd
-    * `aggregate` fold's semantics — and [[graft.functions.BpeEncode]]'s
-    * per-rank pass). An exhausted pair space emits no row for that rank,
-    * exactly like the distributed `limit(1)` over an empty pair frame. */
+    * (word, n) dictionary; emits the (rank, a, b) winner rows: per round,
+    * pair counts weighted by word frequency, winner = max count with ties
+    * broken by (a, b) UTF-8 byte order, then one left-to-right
+    * non-overlapping merge pass per word ([[graft.functions.BpeEncode]]'s
+    * per-rank pass, and the oracle's boundary-exact `replace`). An
+    * exhausted pair space emits no row for that rank. */
   def bpeLocal(wd: DataFrame, numMerges: Int): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("rank", LongType, nullable = false),
       StructField("a", StringType, nullable = true),
       StructField("b", StringType, nullable = true)))
     wd.select(col("word"), col("n")).coalesce(1).mapPartitions { it =>
-      val words = ArrayBuffer.empty[Array[String]]
-      val freqs = ArrayBuffer.empty[Long]
-      it.foreach { r => words += codePoints(r.getString(0)); freqs += r.getLong(1) }
+      val (dict, freqs) = readDict(it)
+      val words = dict.map(codePoints)
       val out = ArrayBuffer.empty[Row]
       var k = 1
       while (k <= numMerges) {
@@ -155,10 +187,10 @@ private[graft] object LocalTrain {
   // ----------------------------------------------------------- Unigram
 
   /** [[Unigram.trainFrame]]'s seed + EM + prune chain in one task over
-    * the (word, n) dictionary; emits the identical final costed table
+    * the (word, n) dictionary; emits the final costed table
     * (piece, n, cost). The Viterbi E-step calls [[graft.functions
-    * .UnigramEncode.compute]] itself (one shared kernel, zero drift) and
-    * costs come from [[graft.functions.ILog2Fp.compute]] — both pure
+    * .UnigramEncode.compute]] itself (one shared kernel with the encoder)
+    * and costs come from [[graft.functions.ILog2Fp.compute]] — both pure
     * integer, so no rounding question even arises. */
   def unigramLocal(wd: DataFrame, maxPieceLen: Int, seedMulti: Int,
                    pruneSchedule: Seq[Int]): DataFrame = {
@@ -167,9 +199,7 @@ private[graft] object LocalTrain {
       StructField("n", LongType, nullable = true),
       StructField("cost", LongType, nullable = true)))
     wd.select(col("word"), col("n")).coalesce(1).mapPartitions { it =>
-      val words = ArrayBuffer.empty[String]
-      val freqs = ArrayBuffer.empty[Long]
-      it.foreach { r => words += r.getString(0); freqs += r.getLong(1) }
+      val (words, freqs) = readDict(it)
 
       def cpLen(s: String): Int = s.codePointCount(0, s.length)
 

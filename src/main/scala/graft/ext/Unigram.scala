@@ -1,23 +1,24 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.functions.{ILog2Fp, UnigramEncode}
+import graft.functions.UnigramEncode
 
-/** Distributed Unigram-LM tokenizer TRAINING (Kudo 2018 — the
-  * SentencePiece unigram model): learn a piece table with costs from
-  * the corpus, then encode anything by Viterbi against the tiny stored
-  * artifact (the native [[graft.functions.UnigramEncode]] expression).
-  * The OTHER canonical subword tokenizer beside [[Bpe]] — together they
-  * complete the family the fertility/drift monitors report on. No
-  * reference-repo counterpart; training-data-pipeline surface.
+/** Unigram-LM tokenizer TRAINING (Kudo 2018 — the SentencePiece
+  * unigram model): learn a piece table with costs from the corpus, then
+  * encode anything by Viterbi against the tiny stored artifact (the
+  * native [[graft.functions.UnigramEncode]] expression). The OTHER
+  * canonical subword tokenizer beside [[Bpe]] — together they complete
+  * the family the fertility/drift monitors report on. No reference-repo
+  * counterpart; training-data-pipeline surface.
   *
   * Same economics as [[Bpe]]: the corpus is scanned ONCE into the word
   * dictionary (distinct word, frequency), and everything after — seed,
-  * EM rounds, pruning — runs at VOCABULARY scale. Per round:
+  * EM rounds, pruning — runs at VOCABULARY scale, inside one task
+  * ([[LocalTrain.unigramLocal]]). Per round:
   *
   *   - costs: piece cost = ilog2fp(Σ(n+1)) − ilog2fp(n+1), i.e.
   *     −log2 p(piece) in 2^16 fixed point with add-one smoothing
@@ -29,15 +30,14 @@ import graft.functions.{ILog2Fp, UnigramEncode}
   *     with float log-probs the two engines' libm could disagree in
   *     the last ulp and flip a comparison.
   *   - segment (hard-EM E-step): every dictionary word is
-  *     Viterbi-segmented under the current costs — the piece table
-  *     rides a 1-row broadcast array pair onto the dictionary, the
-  *     [[Bpe.bpeTokens]] artifact pattern. Hard EM (count the single
-  *     best segmentation, not posterior expectations) is the
+  *     Viterbi-segmented under the current costs by the encoder's own
+  *     kernel ([[graft.functions.UnigramEncode.compute]]). Hard EM (count
+  *     the single best segmentation, not posterior expectations) is the
   *     deterministic simplification; Kudo's §3.2 EM uses posteriors,
   *     but the argmax counts converge to the same prune ordering on
   *     anything this side of a tie and keep every count integral.
-  *   - recount (M-step): explode the segmentations weighted by word
-  *     frequency — one O(vocab) aggregate.
+  *   - recount (M-step): the segmentations' pieces counted, weighted by
+  *     word frequency.
   *   - prune: single characters are ALWAYS kept (the fallback
   *     alphabet, Kudo §3.2's character coverage); multi-char pieces
   *     keep the top-K by (count desc, piece asc) on a shrinking
@@ -48,10 +48,10 @@ import graft.functions.{ILog2Fp, UnigramEncode}
   *     corpus the orderings agree; the simplification is documented,
   *     not hidden).
   *
-  * Loop hygiene is [[Bpe.trainBpeFrame]]'s: the dictionary is built
-  * once and localCheckpoint'd; each round's vocabulary is
-  * localCheckpoint'd and the superseded round freed; nothing is ever
-  * collected to the driver.
+  * Loop hygiene is [[Bpe.trainBpeFrame]]'s: the dictionary feeds one
+  * task that runs seed, EM and prune in memory, so a query starts no
+  * job while it is built and none per round; the task fails the query
+  * when the dictionary holds more than [[LocalTrain.MaxDictRows]] words.
   *
   * The DuckDB oracle replays training EXHAUSTIVELY: all 2^(len−1)
   * segmentations per distinct word (corpus words are short; this is
@@ -74,36 +74,6 @@ object Unigram {
     * the same shape. */
   private[ext] val PruneSchedule = Seq(48, 36, 27, 20)
 
-  /** (word, n) — the word-frequency dictionary. */
-  private def wordDict(in: DataFrame): DataFrame =
-    in.select(explode(split(col("text"), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-
-  /** Seed vocabulary: every single character, plus the top
-    * [[SeedMulti]] substrings of length 2..[[MaxPieceLen]] by
-    * frequency-weighted occurrence multiplicity — the standard
-    * frequent-substring approximation of Kudo's suffix-array seed. */
-  private def seedVocab(wd: DataFrame): DataFrame = {
-    val subs = wd.select(col("n"),
-        explode(flatten(transform(sequence(lit(1), length(col("word"))), i =>
-          transform(
-            sequence(i, least(length(col("word")), i + lit(MaxPieceLen - 1))),
-            j => col("word").substr(i, j - i + lit(1)))))).as("piece"))
-      .groupBy(col("piece")).agg(sum(col("n")).as("n"))
-    subs.filter(length(col("piece")) === 1)
-      .unionByName(
-        subs.filter(length(col("piece")) >= 2)
-          .orderBy(col("n").desc, col("piece")).limit(SeedMulti))
-  }
-
-  /** Attach integer costs: −log2 of the add-one-smoothed unigram
-    * probability in 2^16 fixed point. The 1-row total broadcasts. */
-  private def withCosts(vocab: DataFrame): DataFrame =
-    vocab.crossJoin(broadcast(vocab.agg(sum(col("n") + 1).as("tot"))))
-      .select(col("piece"), col("n"),
-        (ILog2Fp(col("tot")) - ILog2Fp(col("n") + 1)).as("cost"))
-
   /** Fold a costed vocabulary into the 1-row (pieces[], costs[])
     * arrays [[graft.functions.UnigramEncode]] takes — piece-sorted so
     * the broadcast artifact is deterministic ([[Bpe]]'s mergesArray).
@@ -118,40 +88,9 @@ object Unigram {
 
   /** Train on `in` (needs a `text` column); returns the final costed
     * piece table (piece, n, cost). */
-  def trainFrame(in: DataFrame): DataFrame = {
-    val wd = wordDict(in).localCheckpoint()
-    // the [[Bpe.trainBpeFrame]] two-regime split: a gate-scale
-    // dictionary runs the WHOLE seed+EM chain inside one task
-    // ([[LocalTrain.unigramLocal]] — r21: the 1-task-job spelling still
-    // paid ~11 job launches per training); the distributed loop is the
-    // web-scale path
-    if (Iterate.solveLocally(wd.count(), Iterate.MaxDictRows))
-      return LocalTrain.unigramLocal(wd, MaxPieceLen, SeedMulti, PruneSchedule)
-    var vocab = seedVocab(wd).localCheckpoint()
-    for (k <- PruneSchedule) {
-      val art = artifact(withCosts(vocab)).localCheckpoint() // 1 row
-      val counts = wd.crossJoin(broadcast(art))
-        .select(col("n"),
-          explode(UnigramEncode(col("word"), col("pieces"), col("costs")))
-            .as("piece"))
-        .groupBy(col("piece")).agg(sum(col("n")).as("n2"))
-      val recount = vocab.select(col("piece"))
-        .join(counts, Seq("piece"), "left")
-        .select(col("piece"), coalesce(col("n2"), lit(0L)).as("n"))
-      val next = recount.filter(length(col("piece")) === 1)
-        .unionByName(
-          recount.filter(length(col("piece")) >= 2)
-            .orderBy(col("n").desc, col("piece")).limit(k))
-        .localCheckpoint()
-      Graph.freeCheckpoint(vocab)
-      Graph.freeCheckpoint(art)
-      vocab = next
-    }
-    val fin = withCosts(vocab).localCheckpoint()
-    Graph.freeCheckpoint(vocab)
-    Graph.freeCheckpoint(wd)
-    fin
-  }
+  def trainFrame(in: DataFrame): DataFrame =
+    LocalTrain.unigramLocal(Bpe.wordDict(in), MaxPieceLen, SeedMulti,
+      PruneSchedule)
 
   /** Gate query: the learned piece table itself (piece, n, cost). */
   def unigramPieces(spark: SparkSession, dir: String): DataFrame =

@@ -121,4 +121,16 @@ class BpeSpec extends AnyFunSuite {
     // a fully-alien word falls back to pure code points
     assert(enc("zqx", merges) == Seq("z", "q", "x"))
   }
+
+  test("building the trainer starts no Spark job") {
+    val docs = Tables.documents(spark, TestSpark.sfDir)
+    val (_, jobs) = TestSpark.countJobs(ext.Bpe.trainBpeFrame(docs))
+    assert(jobs == 0, s"building the BPE trainer started $jobs jobs")
+  }
+
+  test("a dictionary above the bound fails the query with the bound in its message") {
+    val msg = TestSpark.dictionaryOverBound(ext.Bpe.trainBpeFrame(_))
+    assert(msg.contains(s"${ext.LocalTrain.MaxDictRows + 1} distinct words") &&
+           msg.contains(ext.LocalTrain.MaxDictRows.toString), msg)
+  }
 }

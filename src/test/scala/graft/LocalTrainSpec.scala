@@ -3,12 +3,15 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r21 local-trainer regimes ([[graft.ext.LocalTrain]]) must be
-  * BIT-IDENTICAL to the distributed loops they replace — same rows,
-  * same values, for every trainer family. Each test runs the same gate
-  * query under both regimes ([[TestSpark.bothRegimes]]) and
-  * compares collected rows exactly: these are the frames the DuckDB
-  * oracles hash, so "close" is not good enough. */
+/** The forked local-trainer regimes ([[graft.ext.LocalTrain.gdLocal]],
+  * [[graft.ext.LocalTrain.lloydLocal]]) must be BIT-IDENTICAL to the
+  * distributed loops they stand beside — same rows, same values, for
+  * every forked trainer family. Each test runs the same gate query under
+  * both regimes ([[TestSpark.bothRegimes]]) and compares collected rows
+  * exactly: these are the frames the DuckDB oracles hash, so "close" is
+  * not good enough. BPE and Unigram have no pair here: they only ever
+  * train in one task, and the DuckDB oracles at two scale factors are
+  * their independent reference. */
 class LocalTrainSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
@@ -23,22 +26,6 @@ class LocalTrainSpec extends AnyFunSuite {
     val (local, dist) = TestSpark.bothRegimes(rows(q))
     assert(local.nonEmpty, s"$name: empty result")
     assert(local == dist, s"$name: local regime diverges from distributed")
-  }
-
-  test("bpe_merges: local trainer ≡ distributed loop") {
-    assertSame("bpe_merges", graft.ext.Bpe.bpeMerges(spark, dir))
-  }
-
-  test("bpe_apply: frozen-split local trainer ≡ distributed loop") {
-    assertSame("bpe_apply", graft.ext.Bpe.bpeApply(spark, dir))
-  }
-
-  test("unigram_pieces: local trainer ≡ distributed loop") {
-    assertSame("unigram_pieces", graft.ext.Unigram.unigramPieces(spark, dir))
-  }
-
-  test("unigram_apply: frozen-split local trainer ≡ distributed loop") {
-    assertSame("unigram_apply", graft.ext.Unigram.unigramApply(spark, dir))
   }
 
   test("quality_clf_train: local GD ≡ distributed loop") {

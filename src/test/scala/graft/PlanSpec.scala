@@ -304,25 +304,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("Present.RangeSortConf flips every presentation sort to a range sort") {
-    // The corpus-scale escape hatch: per-doc-output queries (one row per
-    // document) must be switchable to a distributed range sort with ONE
-    // session conf — the production deployment where repartition(1)
-    // would funnel the corpus through a single task.
-    spark.conf.set(graft.Present.RangeSortConf, "true")
-    try {
-      // executedPlan, not sparkPlan: a global Sort's range exchange is
-      // inserted by EnsureRequirements, which runs after sparkPlan
-      val plan = ext.Text.normalize(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("rangepartitioning"),
-             s"RangeSortConf did not plan a distributed range sort:\n$plan")
-      assert(!plan.contains("SinglePartition") &&
-             !plan.contains("RoundRobinPartitioning(1)"),
-             s"RangeSortConf left a single-partition funnel in the plan:\n$plan")
-    } finally spark.conf.unset(graft.Present.RangeSortConf)
-  }
-
   test("range join is a bucketed equi-join — never a nested-loop/cartesian") {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val old = spark.conf.get(key)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.Assertions._
 
 import graft.ext.Iterate
@@ -61,5 +61,18 @@ object TestSpark {
     assert(distJobs > localJobs,
       s"distributed run started $distJobs jobs, local $localJobs")
     (local, dist)
+  }
+
+  /** Train `train` over a corpus of one more distinct word than
+    * [[graft.ext.LocalTrain.MaxDictRows]] and return the failure's
+    * messages, outermost first; fails the calling test if training
+    * succeeds. */
+  def dictionaryOverBound(train: DataFrame => DataFrame): String = {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val docs = spark.range(graft.ext.LocalTrain.MaxDictRows + 1)
+      .select(concat(lit("w"), col("id").cast("string")).as("text"))
+    val e = intercept[Exception](train(docs).collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
   }
 }

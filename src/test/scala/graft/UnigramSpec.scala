@@ -134,4 +134,16 @@ class UnigramSpec extends AnyFunSuite {
       assert(r.getLong(3) == toks, s"lang ${r.getString(0)} n_tokens drifted")
     }
   }
+
+  test("building the trainer starts no Spark job") {
+    val docs = Tables.documents(spark, TestSpark.sfDir)
+    val (_, jobs) = TestSpark.countJobs(ext.Unigram.trainFrame(docs))
+    assert(jobs == 0, s"building the Unigram trainer started $jobs jobs")
+  }
+
+  test("a dictionary above the bound fails the query with the bound in its message") {
+    val msg = TestSpark.dictionaryOverBound(ext.Unigram.trainFrame(_))
+    assert(msg.contains(s"${ext.LocalTrain.MaxDictRows + 1} distinct words") &&
+           msg.contains(ext.LocalTrain.MaxDictRows.toString), msg)
+  }
 }

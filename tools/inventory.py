@@ -9,7 +9,10 @@ Reports, for the checkout at CHECKOUT (default: this repository):
     `src/main`;
   - the sorted set of `spark.graft.*` conf keys named under `src/main`;
   - duplicate paths: every call site of the local-vs-distributed regime
-    predicate `Iterate.solveLocally` under `src/main`, as file:line.
+    predicate `Iterate.solveLocally` under `src/main`, as file:line;
+  - eager sites: every `.localCheckpoint(` call under `src/main`, as
+    file:line, comment lines excluded (each is an eager Spark job when
+    it runs).
 
 Every change reports this before and after, so a growing option surface
 or line count shows up in review rather than after the fact.
@@ -21,6 +24,8 @@ import sys
 ENV_RE = re.compile(r"\bSPARK_GRAFT_[A-Z0-9_]+")
 CONF_RE = re.compile(r"\"(spark\.graft\.[A-Za-z0-9_.]+)\"")
 FORK_RE = re.compile(r"(?<!def )\bsolveLocally\(")
+EAGER_RE = re.compile(r"\.localCheckpoint\(")
+COMMENT_RE = re.compile(r"^\s*(//|/\*|\*)")
 
 
 def scala_files(root: pathlib.Path):
@@ -44,12 +49,14 @@ def main() -> int:
     print(f"conf_keys {len(confs)}")
     for c in confs:
         print(f"  {c}")
-    forks = [f"{f.relative_to(repo)}:{n}" for f in main_files
-             for n, line in enumerate(texts[f].splitlines(), 1)
-             if FORK_RE.search(line)]
-    print(f"duplicate_paths {len(forks)}")
-    for f in forks:
-        print(f"  {f}")
+    for name, pattern in (("duplicate_paths", FORK_RE),
+                          ("eager_sites", EAGER_RE)):
+        sites = [f"{f.relative_to(repo)}:{n}" for f in main_files
+                 for n, line in enumerate(texts[f].splitlines(), 1)
+                 if pattern.search(line) and not COMMENT_RE.match(line)]
+        print(f"{name} {len(sites)}")
+        for site in sites:
+            print(f"  {site}")
     return 0
 
 
